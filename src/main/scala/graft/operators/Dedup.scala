@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.Tables
 import graft.functions.Parity._
@@ -17,7 +19,7 @@ import graft.functions.TextFunctions._
   * shape where candidate generation is O(n) and verification touches only
   * colliding groups. The Jaccard query blocks on (length band, first
   * token) instead of an O(n²) cross join; clustering is a bounded-round
-  * label-propagation loop over distributed frames.
+  * star-contraction loop over distributed frames with a one-task finish.
   */
 object Dedup {
 
@@ -608,12 +610,15 @@ object Dedup {
     *
     * Driver-side loop discipline: the while loop is CONTROL FLOW with
     * a logarithmic bound; per-round data stays distributed and the
-    * only driver values are the convergence counts.
+    * loop reads back only observed metrics of the round's own
+    * checkpoint (edge count, unsettled-node count) — no extra jobs.
     * localCheckpoint(eager) per round truncates the lineage (otherwise
     * round k replans k rewrites deep) and lets the ContextCleaner drop
     * round k-1's blocks once unreferenced. Each star step is ONE
     * window over the high-cardinality node key (balanced groups) plus
-    * a distinct — no per-round global structure. */
+    * a distinct — no per-round global structure. Once the edge set
+    * fits [[StarFinishEdges]], the loop hands off to a one-task
+    * union-find ([[unionFindLabels]]). */
   /** Connected components over an undirected pair graph: (doc_a, doc_b)
     * rows -> (node, lbl) with lbl = component minimum. Extracted from
     * [[dupClusters]] so specs can pin it on synthetic graphs (chains,
@@ -621,77 +626,128 @@ object Dedup {
   private[graft] def connectedComponents(pairs: DataFrame): DataFrame =
     starContract(pairs)._1
 
+  /** Edge budget of one task: an edge set at or below it is resolved by
+    * [[unionFindLabels]] in a single partition; above it the contraction
+    * rounds run distributed until it fits. At bench and oracle scale the
+    * whole pair graph fits, so the loop runs 0 rounds. */
+  private[graft] val StarFinishEdges = 100000L
+
   /** [[connectedComponents]] plus the round count, exposed so specs can
-    * assert the logarithmic convergence bound. */
-  private[graft] def starContract(pairs: DataFrame): (DataFrame, Int) = {
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("u"))
+    * assert the logarithmic convergence bound. `finishEdges` is the
+    * one-task budget; specs pass 0 to force every round through the
+    * distributed loop. */
+  private[graft] def starContract(pairs: DataFrame,
+      finishEdges: Long = StarFinishEdges): (DataFrame, Int) = {
     // invariant: directed max -> min, deduped, no self-loops
     def canon(e: DataFrame): DataFrame = e
       .select(greatest(col("u"), col("v")).as("u"), least(col("u"), col("v")).as("v"))
       .filter(col("u") =!= col("v")).distinct()
-    // large-star: for each edge (u,v) with v > u, emit (v, min(N[u]));
-    // the minimum is over the closed SYMMETRIC neighborhood, so both
-    // directions of every edge feed the window
-    def largeStar(e: DataFrame): DataFrame = {
-      val sym = e.union(e.select(col("v").as("u"), col("u").as("v")))
-      sym.withColumn("m", least(min(col("v")).over(w), col("u")))
-        .filter(col("v") > col("u"))
-        .select(col("v").as("u"), col("m").as("v"))
-        .distinct() // m < u < v: stays max->min, never a self-loop
+    // the edge count rides on the checkpoint's own job as an observed
+    // metric; unnamed Observations cannot collide across concurrent calls
+    def checkpointed(e: DataFrame): (DataFrame, Long) = {
+      val size = Observation()
+      val frame = e.observe(size, count(lit(1)).as("n")).localCheckpoint(true)
+      (frame, observed(size))
     }
-    // small-star: per node u over its SMALLER neighbors (the max->min
-    // orientation already gives exactly those), emit (v, m) and (u, m)
-    def smallStar(e: DataFrame): DataFrame = {
-      val withM = e.withColumn("m", min(col("v")).over(w))
-      withM.filter(col("v") =!= col("m"))
-        .select(col("v").as("u"), col("m").as("v"))
-        .union(withM.select(col("u"), col("m").as("v")))
-        .distinct() // m = min of strictly-smaller neighbors: no self-loops
-    }
-    var edges = canon(pairs.select(col("doc_a").as("u"), col("doc_b").as("v")))
-      .localCheckpoint(true)
-    // Round-13 (VERDICT r12 task 1 — the q64 32-core pathology): each
-    // contraction round runs 2 window shuffles + a distinct + the
-    // convergence check, all at the SESSION shuffle width. The verified
-    // near-dup pair graph is orders of magnitude smaller than the corpus
-    // (a few hundred edges at bench SFs), so at local[32] the per-round
-    // task-launch/stage overhead dominated: q64 read 4.09 s at 32 cores
-    // vs 0.29 s at 8 (scaling ratio 0.08). Fix is SCALE-ADAPTIVE, not a
-    // local[32] constant: size the loop's shuffle width from the
-    // MEASURED edge count (~100k edges per partition, floor 1, ceiling
-    // the session width — a 100 TB pair graph keeps full parallelism),
-    // and make the convergence check one action in the common case: the
-    // edge count is already known per round, counts differing proves
-    // non-convergence without the exceptAll job; the exact set compare
-    // runs only when counts match. The conf is restored on every exit.
-    val spark = edges.sparkSession
-    val sessionWidth = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    var prevCount = edges.count()
+    var (edges, size) =
+      checkpointed(canon(pairs.select(col("doc_a").as("u"), col("doc_b").as("v"))))
     var rounds = 0
-    var done = false
-    try {
-      // terminates in O(log n) rounds (Kiveris et al. thm. 3/4); the cap
-      // is a regression guard far above that bound for any physical
-      // graph, never a tuning knob
-      while (!done) {
-        rounds += 1
-        require(rounds <= 200, s"star contraction failed to converge after $rounds rounds")
-        val width = math.max(1L, math.min(prevCount / 100000L + 1, sessionWidth.toLong))
-        spark.conf.set("spark.sql.shuffle.partitions", width.toString)
-        val next = smallStar(largeStar(edges)).localCheckpoint(true)
-        val nextCount = next.count()
-        done = nextCount == prevCount && next.exceptAll(edges).isEmpty
-        prevCount = nextCount
-        edges = next
+    var settled = false
+    // terminates in O(log n) rounds (Kiveris et al. thm. 3/4); the cap
+    // is a regression guard far above that bound for any physical
+    // graph, never a tuning knob. Above the budget the rounds run at
+    // the session's shuffle width (AQE coalesces small partitions).
+    while (size > finishEdges && !settled) {
+      rounds += 1
+      require(rounds <= 200, s"star contraction failed to converge after $rounds rounds")
+      val unsettled = Observation()
+      val (next, nextSize) = checkpointed(smallStar(largeStar(edges, unsettled)))
+      settled = observed(unsettled) == 0
+      edges = next
+      size = nextSize
+    }
+    val labels =
+      if (size <= finishEdges) unionFindLabels(edges)
+      else {
+        // a star forest above the budget: every non-centre node appears
+        // exactly once as u with its centre as v; centres label themselves
+        edges.select(col("u").as("node"), col("v").as("lbl"))
+          .union(edges.select(col("v").as("node"), col("v").as("lbl")))
+          .distinct()
       }
-    } finally spark.conf.set("spark.sql.shuffle.partitions", sessionWidth.toString)
-    // fixpoint = stars centered at component minima: every non-center
-    // node appears exactly once as u with its center as v; centers
-    // label themselves
-    val labels = edges.select(col("u").as("node"), col("v").as("lbl"))
-      .union(edges.select(col("v").as("node"), col("v").as("lbl")))
-      .distinct()
     (labels, rounds)
+  }
+
+  private val starWindow = org.apache.spark.sql.expressions.Window.partitionBy(col("u"))
+
+  /** Large-star round step over max -> min edges (u, v): for each edge
+    * (u,v) with v > u, emit (v, min(N[u])); the minimum is over the
+    * closed SYMMETRIC neighborhood, so both directions of every edge feed
+    * the window. The same window also observes the input's UNSETTLED
+    * nodes into `unsettled` ("n"): neither a centre (every neighbor
+    * larger) nor a leaf (degree 1), counted once per node on its
+    * min-neighbor row (the symmetric edge set has no duplicate rows).
+    * Zero unsettled nodes means the input is a forest of stars centred at
+    * component minima — the contraction's fixpoint. */
+  private[graft] def largeStar(e: DataFrame, unsettled: Observation): DataFrame = {
+    val sym = e.union(e.select(col("v").as("u"), col("u").as("v")))
+    sym.withColumn("nmin", min(col("v")).over(starWindow))
+      .withColumn("deg", count(col("v")).over(starWindow))
+      .observe(unsettled, count(when(col("v") === col("nmin") &&
+        col("nmin") < col("u") && col("deg") > 1, lit(1))).as("n"))
+      .filter(col("v") > col("u"))
+      .select(col("v").as("u"), least(col("nmin"), col("u")).as("v"))
+      .distinct() // m < u < v: stays max->min, never a self-loop
+  }
+
+  /** Small-star round step: per node u over its SMALLER neighbors (the
+    * max -> min orientation already gives exactly those), emit (v, m) and
+    * (u, m). */
+  private[graft] def smallStar(e: DataFrame): DataFrame = {
+    val withM = e.withColumn("m", min(col("v")).over(starWindow))
+    withM.filter(col("v") =!= col("m"))
+      .select(col("v").as("u"), col("m").as("v"))
+      .union(withM.select(col("u"), col("m").as("v")))
+      .distinct() // m = min of strictly-smaller neighbors: no self-loops
+  }
+
+  private def observed(o: Observation): Long = o.get("n").asInstanceOf[Long]
+
+  /** One-task finish of [[starContract]]: (u, v) edges (at most
+    * [[StarFinishEdges]] of them) -> (node, lbl) by an iterative
+    * union-find inside ONE lazy partition, so it runs within the
+    * consumer's own action. Nodes are ranked by Spark's ordering first
+    * (UTF8String byte order for strings, which differs from
+    * `String.compareTo` above the BMP), so the root with the smaller rank
+    * wins every union and each root is its component's minimum; rows come
+    * out in rank order, independent of shuffle fetch order. */
+  private def unionFindLabels(edges: DataFrame): DataFrame = {
+    val schema = StructType(Seq(edges.schema("u").copy(name = "node"),
+      edges.schema("v").copy(name = "lbl")))
+    val sorted: Array[Any] => Array[Any] = schema("node").dataType match {
+      case LongType => _.sortBy(_.asInstanceOf[Long])
+      case StringType => nodes => nodes
+        .map(n => (UTF8String.fromString(n.asInstanceOf[String]), n))
+        .sortWith((a, b) => a._1.compareTo(b._1) < 0).map(_._2)
+      case other => throw new IllegalArgumentException(
+        s"connected components over $other nodes")
+    }
+    edges.repartition(1).mapPartitions { rows =>
+      val pairs = rows.map(r => (r.get(0), r.get(1))).toArray
+      val nodes = sorted(pairs.flatMap(p => Array(p._1, p._2)).distinct)
+      val rank = nodes.zipWithIndex.toMap
+      val parent = Array.range(0, nodes.length)
+      def find(x0: Int): Int = {
+        var x = x0
+        while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+        x
+      }
+      pairs.foreach { case (a, b) =>
+        val (ra, rb) = (find(rank(a)), find(rank(b)))
+        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+      }
+      nodes.indices.iterator.map(i => Row(nodes(i), nodes(find(i))))
+    }(Encoders.row(schema))
   }
 
   /** Cluster assignment as a persisted artifact (same pattern as q56's

@@ -184,14 +184,25 @@ class DedupSpec extends SparkSuite {
     import spark.implicits._
     // the adversarial case for min-label propagation: a path graph,
     // where label propagation needs diameter (= 1023) rounds; the
-    // large-star/small-star contraction must stay logarithmic
+    // large-star/small-star contraction must stay logarithmic. Budget 0
+    // keeps every round in the distributed loop (at the default budget
+    // the chain fits one task and the loop runs 0 rounds).
     val n = 1024
     val pairs = (0 until n - 1).map(i => (i.toLong, i + 1L)).toDF("doc_a", "doc_b")
-    val (labels, rounds) = Dedup.starContract(pairs)
+    val (labels, rounds) = Dedup.starContract(pairs, finishEdges = 0)
     assert(rounds <= 25, s"chain took $rounds rounds — not logarithmic")
     val got = labels.collect().map(r => r.getLong(0) -> r.getLong(1))
     assert(got.length === n)
     assert(got.forall(_._2 == 0L), "every node must label to the chain minimum")
+    // the loop exits on a fixpoint: the exit edge set (every non-centre
+    // node -> its centre) survives one more round unchanged
+    val exit = labels.filter(col("node") =!= col("lbl"))
+      .select(col("node").as("u"), col("lbl").as("v")).cache()
+    val unsettled = org.apache.spark.sql.Observation()
+    val again = Dedup.smallStar(Dedup.largeStar(exit, unsettled)).cache()
+    assert(again.exceptAll(exit).isEmpty && exit.exceptAll(again).isEmpty)
+    assert(unsettled.get("n") === 0L)
+    again.unpersist(); exit.unpersist()
   }
 
   test("connectedComponents matches a driver-side union-find on random graphs") {
@@ -213,9 +224,60 @@ class DedupSpec extends SparkSuite {
       }
       val expected = edges.flatMap(e => Seq(e._1, e._2)).distinct
         .map(n => n -> find(n)).toMap
-      val got = Dedup.connectedComponents(edges.toDF("doc_a", "doc_b"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got === expected, s"trial $trial, ${edges.size} edges")
+      // both paths: the distributed loop (budget 0) and the one-task finish
+      for (budget <- Seq(0L, Dedup.StarFinishEdges)) {
+        val got = Dedup.starContract(edges.toDF("doc_a", "doc_b"), budget)._1
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        assert(got === expected, s"trial $trial, budget $budget, ${edges.size} edges")
+      }
+    }
+  }
+
+  test("connectedComponents labels string nodes by Spark's min, not String.compareTo") {
+    import spark.implicits._
+    // U+FFFD sorts AFTER an astral-plane code point in UTF-16
+    // (String.compareTo) but BEFORE it in UTF-8 byte order (Spark)
+    val pairs = Seq(("\uFFFD", "\uD83D\uDE00"), ("b", "a"), ("c", "b")).toDF("doc_a", "doc_b")
+    val sparkMin = Seq("\uFFFD", "\uD83D\uDE00").toDF("n").agg(min("n")).head().getString(0)
+    assert(sparkMin === "\uFFFD")
+    for (budget <- Seq(0L, Dedup.StarFinishEdges)) {
+      val got = Dedup.starContract(pairs, budget)._1
+        .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+      assert(got === Map("\uFFFD" -> sparkMin, "\uD83D\uDE00" -> sparkMin,
+        "a" -> "a", "b" -> "a", "c" -> "a"), s"budget $budget")
+    }
+  }
+
+  test("connectedComponents of zero edges is an empty frame with the node schema") {
+    import spark.implicits._
+    for (budget <- Seq(0L, Dedup.StarFinishEdges)) {
+      val (labels, rounds) =
+        Dedup.starContract(Seq.empty[(Long, Long)].toDF("doc_a", "doc_b"), budget)
+      assert(labels.schema.map(f => f.name -> f.dataType) ===
+        Seq("node" -> org.apache.spark.sql.types.LongType,
+          "lbl" -> org.apache.spark.sql.types.LongType))
+      assert(labels.isEmpty && rounds === 0, s"budget $budget")
+    }
+  }
+
+  test("connectedComponents leaves session conf alone and is safe on a shared session") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    import spark.implicits._
+    val width = spark.conf.get("spark.sql.shuffle.partitions")
+    val rnd = new scala.util.Random(7)
+    val pairs = Seq.fill(400)((rnd.nextInt(300).toLong, rnd.nextInt(300).toLong))
+      .toDF("doc_a", "doc_b")
+    def run(budget: Long): Seq[(Long, Long)] = Dedup.starContract(pairs, budget)._1
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toSeq.sorted
+    for (budget <- Seq(0L, Dedup.StarFinishEdges)) {
+      val solo = run(budget)
+      assert(spark.conf.get("spark.sql.shuffle.partitions") === width)
+      val both = Await.result(Future.sequence(Seq(Future(run(budget)), Future(run(budget)))),
+        5.minutes)
+      assert(both.forall(_ == solo), s"budget $budget")
+      assert(spark.conf.get("spark.sql.shuffle.partitions") === width)
     }
   }
 
