@@ -1,4 +1,6 @@
 package graft
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main (driver contract): times every registered query at
@@ -61,34 +63,19 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // round-12: several operators localCheckpoint their narrow
-      // decision frames; the blocks are freed by ContextCleaner only
-      // after a JVM GC enqueues the weak references, and the default
-      // periodic-GC interval (30 min) exceeds a full bench run — so a
-      // 900-query session accumulated block-manager state and slowed
-      // its own tail (measured: q265 3.4 s inside the long run vs
-      // 1.6 s fresh). A 45 s periodic GC keeps cleanup continuous;
-      // same remedy Spark documents for long-running drivers.
-      .config("spark.cleaner.periodicGC.interval", "45s")
-      // round-13 measured NON-change: AQE size-based partition
-      // coalescing (coalescePartitions.parallelismFirst=false) was
-      // tried for the r12 "32-core over-parallelization" list and made
-      // the suite WORSE across the board (min-of-reps +7-58% on a
-      // 12-query class-spanning set; q30 +33%, q8 +58%) — this suite's
-      // post-shuffle work is CPU-dense per shuffled byte (quadratic
-      // verifies, window chains), so coalescing tiny-byte stages to one
-      // partition serializes real compute. parallelismFirst=true (the
-      // default) is the right setting here at every scale; the r12
-      // scaling-block 0.08-0.4 ratios were median contamination by
-      // drift/build reps, not a plan defect (OPTIMIZATION_r13.md).
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // Session settings live in graft.Session. Round-13 measured
+    // NON-change to them: AQE size-based partition coalescing
+    // (coalescePartitions.parallelismFirst=false) was tried for the
+    // r12 "32-core over-parallelization" list and made
+    // the suite WORSE across the board (min-of-reps +7-58% on a
+    // 12-query class-spanning set; q30 +33%, q8 +58%) — this suite's
+    // post-shuffle work is CPU-dense per shuffled byte (quadratic
+    // verifies, window chains), so coalescing tiny-byte stages to one
+    // partition serializes real compute. parallelismFirst=true (the
+    // default) is the right setting here at every scale; the r12
+    // scaling-block 0.08-0.4 ratios were median contamination by
+    // drift/build reps, not a plan defect (OPTIMIZATION_r13.md).
+    val spark = Session.local()
     // warm-up: JIT the scan/agg/write paths once, untimed
     spark.read.parquet(s"$sfDir/lineitem.parquet")
       .groupBy("l_returnflag").count()
@@ -104,81 +91,43 @@ object Bench {
         .setMaxIter(5).fit(assembled)
     }
     // warm-up: JIT the streaming machinery (microbatch planner, state
-    // store provider, memory sink) with a 3-row stateful stream
+    // store provider, memory sink) with three 3-row streams started the
+    // way the streaming queries start theirs: a stateful windowed count;
+    // a stream-stream join (symmetric hash join state managers, one per
+    // side per partition — otherwise the first rep of the interval-join
+    // query pays several seconds of classloading); and transformWithState
+    // on the RocksDB backend (q99's API requires RocksDB; loading its
+    // native library and column-family plumbing is a one-time cost that
+    // would otherwise land on q99's first rep)
     locally {
       import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       import org.apache.spark.sql.functions._
+      import org.apache.spark.sql.streaming.OutputMode
+      import graft.streaming.EventStream
       import spark.implicits._
       implicit val sq = spark.sqlContext
       val ms = MemoryStream[Long]
       ms.addData(1L, 2L, 3L)
-      val q = ms.toDF().withColumn("ts", timestamp_micros(col("value")))
-        .withWatermark("ts", "1 hour")
-        .groupBy(window(col("ts"), "1 minute")).count()
-        .writeStream.format("memory").queryName("bench_warmup_stream")
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      spark.catalog.dropTempView("bench_warmup_stream")
-    }
-    // warm-up: JIT the stream-stream join machinery (symmetric hash join
-    // state managers, one per side per partition) — otherwise the first
-    // rep of the interval-join query pays several seconds of classloading
-    locally {
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      import org.apache.spark.sql.functions._
-      import spark.implicits._
-      implicit val sq = spark.sqlContext
+      EventStream.runToTable(
+        ms.toDF().withColumn("ts", timestamp_micros(col("value")))
+          .withWatermark("ts", "1 hour")
+          .groupBy(window(col("ts"), "1 minute")).count(),
+        "bench_warmup_stream", OutputMode.Complete())
       val l = MemoryStream[Long]; l.addData(1L, 2L, 3L)
       val r = MemoryStream[Long]; r.addData(1L, 2L, 3L)
       val lf = l.toDF().select(col("value").as("lk"),
         timestamp_micros(col("value")).as("lts")).withWatermark("lts", "1 hour")
       val rf = r.toDF().select(col("value").as("rk"),
         timestamp_micros(col("value")).as("rts")).withWatermark("rts", "1 hour")
-      val q = lf.join(rf, col("lk") === col("rk") &&
-          col("rts") >= col("lts") && col("rts") <= col("lts") + expr("INTERVAL 1 MINUTE"))
-        .writeStream.format("memory").queryName("bench_warmup_join")
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      spark.catalog.dropTempView("bench_warmup_join")
-    }
-    // warm-up: JIT + native-lib-load the RocksDB state backend and the
-    // transformWithState machinery (q99's API requires RocksDB; loading
-    // the native library and the provider's column-family plumbing is a
-    // one-time cost that would otherwise land on q99's first rep)
-    locally {
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      import org.apache.spark.sql.streaming.{OutputMode, TimeMode, Trigger}
-      import spark.implicits._
-      implicit val sq = spark.sqlContext
-      val provKey = "spark.sql.streaming.stateStore.providerClass"
-      val prevProv = spark.conf.get(provKey)
-      spark.conf.set(provKey,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
-        val ms = MemoryStream[(String, Long)]
-        ms.addData(("a", 1L), ("b", 2L))
-        val q = ms.toDS().groupByKey(_._1)
-          .transformWithState(new graft.streaming.EventStream.TypeStatsProcessor,
-            TimeMode.None(), OutputMode.Update())
-          .writeStream.format("memory").queryName("bench_warmup_rocksdb")
-          .outputMode("update")
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        spark.catalog.dropTempView("bench_warmup_rocksdb")
-      } finally spark.conf.set(provKey, prevProv)
-    }
-    // Dev-only state-store selector (the driver never sets it): lets the
-    // streaming queries be measured under RocksDB vs the default
-    // HDFS-backed provider without code edits — the r10 task-7 question
-    // (which backend should the 100 TB deployment pick for the
-    // watermark-flush class, q215/q273). q99 keeps its own query-scoped
-    // RocksDB conf either way (its API requires it).
-    sys.env.get("SPARK_GRAFT_STATE_STORE").foreach { s =>
-      if (s == "rocksdb") spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      EventStream.runToTable(
+        lf.join(rf, col("lk") === col("rk") &&
+          col("rts") >= col("lts") && col("rts") <= col("lts") + expr("INTERVAL 1 MINUTE")),
+        "bench_warmup_join", OutputMode.Append())
+      val kv = MemoryStream[(String, Long)]
+      kv.addData(("a", 1L), ("b", 2L))
+      EventStream.runToTable(
+        EventStream.typeStats(kv.toDF().toDF("event_type", "cents")),
+        "bench_warmup_rocksdb", OutputMode.Update(), rocksDb = true)
     }
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
     // dev-only subset filter (comma-separated name substrings); the
@@ -226,17 +175,18 @@ object Bench {
               org.apache.spark.sql.functions.col("text"), "[aeiou]", ""))).as("x"))
     val timed = selected :+ (calibrationName -> probe) :+
       (shuffleProbeName -> shuffleProbe) :+ (computeProbeName -> computeProbe)
-    // `reps` full passes over the suite, each in a fresh shuffled order.
-    // A failed rep records NO time: a query dying in 50ms at plan time
-    // must not contribute a near-zero median that makes the headline
-    // total look faster than the prior round — its absence plus the
-    // `failed` array is the honest signal.
-    val passes = (1 to reps).map { _ =>
-      rng.shuffle(timed).map { case (name, fn) =>
+    // One timed pass over `fns` in a fresh shuffled order, shared by the
+    // main passes and the drift re-measure. A failed rep records NO
+    // time: a query dying in 50ms at plan time must not contribute a
+    // near-zero median that makes the headline total look faster than
+    // the prior round — its absence plus the `failed` array is the
+    // honest signal. Fatal errors (OOM, linkage) abort the run.
+    def pass(fns: Seq[(String, operators.Relational.Q)]): Map[String, Option[Double]] =
+      rng.shuffle(fns).map { case (name, fn) =>
         val t0 = System.nanoTime()
         val ok =
           try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-          catch { case e: Throwable =>
+          catch { case NonFatal(e) =>
             if (!failed.contains(name)) {
               failed += name
               System.err.println(s"[bench] $name failed: $e")
@@ -245,7 +195,8 @@ object Bench {
           }
         name -> (if (ok) Some((System.nanoTime() - t0) / 1e9) else None)
       }.toMap
-    }
+    // `reps` full passes over the suite
+    val passes = (1 to reps).map(_ => pass(timed))
     // per-query (min, median, max) across passes: the spread makes a
     // single-query drift spike (the q147/q241 class — one rep 3x the
     // others on identical code) self-identifying in the artifact
@@ -295,15 +246,7 @@ object Bench {
       if (driftFlagged.isEmpty) Nil
       else {
         val flaggedFns = selected.filter { case (n, _) => driftFlagged.contains(n) }
-        val rePasses = (1 to 5).map { _ =>
-          rng.shuffle(flaggedFns).map { case (name, fn) =>
-            val t0 = System.nanoTime()
-            val ok =
-              try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-              catch { case _: Throwable => false }
-            name -> (if (ok) Some((System.nanoTime() - t0) / 1e9) else None)
-          }.toMap
-        }
+        val rePasses = (1 to 5).map(_ => pass(flaggedFns))
         driftFlagged.flatMap { name =>
           val ts = rePasses.flatMap(_(name)).sorted
           if (ts.isEmpty) None

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Second-seed corpus generator (VERDICT r11 task 1): reproduces the
@@ -46,15 +46,8 @@ object GenCorpus {
   def main(args: Array[String]): Unit = {
     val outDir = args(0)
     val seed = args(1).toLong
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(
+      extra = Seq("spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS"))
     import spark.implicits._
     new java.io.File(outDir).mkdirs()
 

@@ -7,11 +7,10 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 import graft.functions.GraftFunctions
 
 /** SparkSessionExtensions entry point: sessions created with
-  * `.config("spark.sql.extensions", "graft.GraftExtensions")` get the
-  * engine's native SQL functions injected at session build — no
-  * imperative registration call needed. (`GraftFunctions.register`
-  * remains for sessions the caller doesn't construct.) The function
-  * list itself lives in one place: GraftFunctions.functions. */
+  * `.config("spark.sql.extensions", "graft.GraftExtensions")` — every
+  * [[Session.local]] session — get the engine's native SQL functions
+  * injected at session build. The function list itself lives in one
+  * place: GraftFunctions.functions. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(extensions: SparkSessionExtensions): Unit =
     GraftFunctions.functions.foreach { case (name, builder) =>

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Dev tool: per-query physical-plan diagnostics for the 100 TB design
   * review — shuffle count, join strategies, codegen spans, scan pushdown.
@@ -13,12 +13,7 @@ import org.apache.spark.sql.SparkSession
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local()
 
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       try {
@@ -40,7 +35,7 @@ object PlanAudit {
         println(f"$name%-24s shuffles=${a.shuffles}%-3d codegen=$codegen%-3d joins=[$joins]")
         scans.foreach(s => println(s"    scan: $s"))
       } catch {
-        case e: Throwable => println(s"$name AUDIT FAILED: ${e.getMessage.take(100)}")
+        case NonFatal(e) => println(s"$name AUDIT FAILED: ${e.getMessage.take(100)}")
       }
     }
     spark.stop()

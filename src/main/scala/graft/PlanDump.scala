@@ -12,23 +12,17 @@ import org.apache.spark.sql.execution.ExplainMode
   * contract.
   *
   * Usage: sbt "runMain graft.PlanDump <sfDir> <outDir> [csvNames]"
-  * With no name list, dumps every registered query. The session mirrors
-  * Bench's config (shuffle.partitions = cpus, UTC, UI off) so plan shapes
-  * match what the bench executes.
+  * With no name list, dumps every registered query. The session is
+  * Bench's ([[Session.local]]: `SPARK_GRAFT_CPUS` threads, default 4, and
+  * as many shuffle partitions) so plan shapes match what the bench
+  * executes.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val outDir = args.lift(1).getOrElse("/tmp/plans")
     val names = args.lift(2).map(_.split(',').toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local()
     Files.createDirectories(Paths.get(outDir))
     // Exact-name selection (ADVICE r12: startsWith made "q26" also dump
     // q261/q263/...; evidence files must select exactly what was asked).

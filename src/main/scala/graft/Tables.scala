@@ -25,12 +25,11 @@ object Tables {
     * ops; the session TZ is pinned UTC so epoch math is exact). The
     * testdata generator has shipped two physical layouts — INT64
     * TIMESTAMP(NANOS), which Spark's reader only accepts as a raw long
-    * via the legacy conf, and plain µs `timestamp[us]` (read as NTZ) —
-    * so normalization dispatches on the loaded dtype. */
-  def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    * via the legacy conf every [[Session.local]] session sets, and plain
+    * µs `timestamp[us]` (read as NTZ) — so normalization dispatches on
+    * the loaded dtype. */
+  def events(s: SparkSession, d: String): DataFrame =
     normalizeEvents(table(s, d, "events"))
-  }
 
   /** See [[events]]; shared with the streaming reader so batch and
     * stream frames agree column-for-column. */

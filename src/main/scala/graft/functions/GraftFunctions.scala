@@ -1,20 +1,18 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.types.IntegerType
 
-/** SQL registration for graft's native expressions: after
-  * `GraftFunctions.register(spark)`, `graft_dot(a, b)` and
+/** SQL surface of graft's native expressions: in a session built with
+  * [[graft.GraftExtensions]], `graft_dot(a, b)` and
   * `graft_l2norm(v)` are callable from `spark.sql` / `expr()` — the
   * same codegen'd kernels the Column API uses, exposed to the SQL
   * surface (README.md:251-266 is a SQL-first spec, so the engine's SQL
   * entry point carries the full function surface too). */
 object GraftFunctions {
 
-  /** Single source of truth for the SQL function surface — consumed
-    * both by [[register]] and by [[graft.GraftExtensions]]. */
+  /** Single source of truth for the SQL function surface, injected by
+    * [[graft.GraftExtensions]]. */
   private[graft] val functions: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "graft_dot" -> (es => DotProduct(es(0), es(1))),
     "graft_l2norm" -> (es => L2Norm(es.head)),
@@ -44,16 +42,6 @@ object GraftFunctions {
       case Literal(w: Int, IntegerType) => w
       case other => throw new IllegalArgumentException(
         s"$fn width must be an INT literal, got ${other.sql}")
-    }
-  }
-
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    functions.foreach { case (name, builder) =>
-      registry.registerFunction(
-        FunctionIdentifier(name),
-        new ExpressionInfo("graft.functions.GraftFunctions", name),
-        builder)
     }
   }
 }

@@ -24,10 +24,6 @@ object TextFunctions {
   def stopwordCount(text: Column): Column =
     size(filter(tokens(text), t => t.isInCollection(EnglishStopwords))).cast("bigint")
 
-  /** Type-token ratio: distinct / total tokens (lexical diversity). */
-  def typeTokenRatio(text: Column): Column =
-    size(distinctTokens(text)).cast("double") / size(tokens(text)).cast("double")
-
   /** Word w-shingles as space-joined strings — the unit for MinHash /
     * Jaccard near-dup detection. Empty array when fewer than w tokens.
     * One compiled byte-span pass per row
@@ -120,15 +116,6 @@ object TextFunctions {
   def topShingleStats(text: Column, w: Int): Column =
     org.apache.spark.sql.GraftSqlShim.column(
       TopShingleStats(org.apache.spark.sql.GraftSqlShim.expression(text), w))
-
-  /** MinHash signature over the distinct word shingles: for each of
-    * `perms` permutations, min over shingles of xxhash64(perm, shingle).
-    * Deterministic (seeded by the permutation index). */
-  def minHashSignature(text: Column, w: Int, perms: Int): Column = {
-    val sh = array_distinct(wordShingles(text, w))
-    transform(sequence(lit(0), lit(perms - 1)),
-      p => array_min(transform(sh, s => xxhash64(p, s))))
-  }
 
   /** `sort -V`-style natural sort key (SURVEY §7 hard part 2): every
     * digit run is left-padded to 12 so lexicographic string order equals

@@ -1161,21 +1161,13 @@ object Storage {
     names
   }
 
-  /** Run `body` with the cost-based optimizer + stats-driven join
-    * reorder enabled, restoring the session's previous values after —
-    * the confs are session-global and every OTHER registered query's
-    * plan is pinned by PlanInvariantsSpec under the default optimizer,
-    * so the CBO window must close before this function returns. */
-  private[graft] def withCbo[T](spark: SparkSession)(body: => T): T = {
-    val ks = Seq("spark.sql.cbo.enabled", "spark.sql.cbo.joinReorder.enabled")
-    val prev = ks.map(k => k -> spark.conf.getOption(k))
-    ks.foreach(spark.conf.set(_, "true"))
-    try body
-    finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
+  /** The cost-based optimizer + stats-driven join reorder, for a
+    * [[graft.Session.withConf]] scope: the confs are session-global and
+    * every OTHER registered query's plan is pinned by PlanInvariantsSpec
+    * under the default optimizer, so the CBO window must close before
+    * q308 returns. */
+  private[graft] val CboConf: Seq[(String, String)] =
+    Seq("spark.sql.cbo.enabled" -> "true", "spark.sql.cbo.joinReorder.enabled" -> "true")
 
   /** The q308 star text over the analyzed catalog tables — written in
     * the DELIBERATELY bad syntactic order (fact ⋈ mid-dim first, tiny
@@ -1202,8 +1194,8 @@ object Storage {
     * present); the oracle pins the result, which must be
     * plan-invariant.
     *
-    * The CBO window is scoped: the query MATERIALIZES inside
-    * [[withCbo]] (plan time = execution time for a lazy DataFrame, so
+    * The CBO window is scoped: the query MATERIALIZES inside the
+    * [[CboConf]] scope (plan time = execution time for a lazy DataFrame, so
     * returning an unexecuted frame would let the conf restore defeat
     * the demonstration), and the returned frame is the readback — the
     * q85 stored-result discipline.
@@ -1217,7 +1209,7 @@ object Storage {
     val (o, c, n) = analyzedTables(spark, dir)
     val sf = dir.stripSuffix("/").split('/').last
     val outPath = s"$retentionBase/cbo_star_$sf"
-    withCbo(spark) {
+    graft.Session.withConf(spark, CboConf: _*) {
       spark.sql(cboStarText(o, c, n))
         .write.mode("overwrite").parquet(outPath)
     }

@@ -20,34 +20,10 @@ object StreamingQueries {
   private val runId = new AtomicInteger(0)
   private def sinkName(prefix: String) = s"${prefix}_${runId.incrementAndGet()}"
 
-  /** Plan the streaming query under a shuffle-partition count sized to
-    * its STATE volume, restoring the session's setting afterwards.
-    * Every stateful operator pays a fixed per-partition cost per
-    * microbatch (state-store open/commit/snapshot — a stream-stream join
-    * keeps FOUR stores per partition), so partition count is a
-    * state-volume knob, not a parallelism knob: at harness scale the
-    * state is a few MB and 32 partitions are pure overhead (q58 spent
-    * ~5s/run committing near-empty stores), while a 100 TB deployment
-    * sizes this to keep each store's state in executor memory — same
-    * reasoning as q37's coalesce(1), scoped to the streaming plan only
-    * (the conf is read at query START; batch queries planned after the
-    * restore are untouched). */
-  // parsed ONCE: a malformed value fails at class init, not once per
-  // streaming query; floor of 1 keeps a stray "0" from a zero-partition plan
-  private val defaultStateParts: Int =
-    sys.env.get("SPARK_GRAFT_STATE_PARTS").map(_.trim.toInt).getOrElse(8).max(1)
-
-  private def withStatePartitions[T](spark: SparkSession, n: Int = defaultStateParts)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, n.toString)
-    try body finally spark.conf.set(key, prev)
-  }
-
   /** Q38: watermarked tumbling-hour aggregation over the event stream
     * (§2.10). Complete mode emits every window, so the result is exactly
     * the batch answer. */
-  def streamTumbling(spark: SparkSession, dir: String): DataFrame = withStatePartitions(spark) {
+  def streamTumbling(spark: SparkSession, dir: String): DataFrame = {
     val ev = EventStream.readEvents(spark, s"$dir/events.parquet")
     val agg = EventStream.tumblingCounts(ev)
       .select(col("window_start"), col("event_type"), col("n"))
@@ -62,7 +38,7 @@ object StreamingQueries {
 
   /** Q39: streaming re-delivery dedup (README.md:114) — then a stateless
     * rollup of the deduped stream. Append mode emits first-seen rows. */
-  def streamDedup(spark: SparkSession, dir: String): DataFrame = withStatePartitions(spark) {
+  def streamDedup(spark: SparkSession, dir: String): DataFrame = {
     val ev = EventStream.readEvents(spark, s"$dir/events.parquet")
     val deduped = EventStream.dedupRedelivery(ev)
     val out = EventStream.runToTable(
@@ -82,7 +58,7 @@ object StreamingQueries {
     * state — the oracle drops the last session per user to match.
     * Timestamps are emitted at µs precision: DuckDB truncates the ns
     * parquet timestamp to µs on read, and `div 1000` floors identically. */
-  def streamSessions(spark: SparkSession, dir: String): DataFrame = withStatePartitions(spark) {
+  def streamSessions(spark: SparkSession, dir: String): DataFrame = {
     val ev = EventStream.readEvents(spark, s"$dir/events.parquet")
     val gapNs = 30L * 60 * 1000 * 1000 * 1000
     val sessions = EventStream.sessionize(ev, gapNs)
@@ -133,7 +109,7 @@ object StreamingQueries {
     * feeding files over time relies on event-time-ordered arrival within
     * the 2h watermark delay, which is the standard streaming contract,
     * not an extra constraint. */
-  def streamStreamJoin(spark: SparkSession, dir: String): DataFrame = withStatePartitions(spark) {
+  def streamStreamJoin(spark: SparkSession, dir: String): DataFrame = {
     val path = s"$dir/events.parquet"
     val clicks = EventStream.readEvents(spark, path)
       .filter(col("event_type") === "click")
@@ -180,7 +156,7 @@ object StreamingQueries {
     * verbatim; the oracle is the EXISTS replay of the same predicate.
     * Emission is eager-on-first-match (existence needs no end-of-
     * watermark wait), so Append mode produces the batch answer. */
-  def streamSemiJoin(spark: SparkSession, dir: String): DataFrame = withStatePartitions(spark) {
+  def streamSemiJoin(spark: SparkSession, dir: String): DataFrame = {
     val path = s"$dir/events.parquet"
     val clicks = EventStream.readEvents(spark, path)
       .filter(col("event_type") === "click")
@@ -220,7 +196,7 @@ object StreamingQueries {
     * Spark retain all window state — a production deployment uses
     * Append/Update, where the watermark declared here evicts windows
     * past the horizon and bounds state. */
-  def streamSliding(spark: SparkSession, dir: String): DataFrame = withStatePartitions(spark) {
+  def streamSliding(spark: SparkSession, dir: String): DataFrame = {
     val ev = EventStream.readEvents(spark, s"$dir/events.parquet")
     val agg = ev
       .withWatermark("ts", "2 hours")
@@ -265,7 +241,7 @@ object StreamingQueries {
     * Scale: stateless passthrough (no state store); sink partitioning
     * makes downstream reads prune by event_type. At 100 TB the same
     * job fans into per-trigger files whose compaction is exactly q68. */
-  def streamFileSink(spark: SparkSession, dir: String): DataFrame = withStatePartitions(spark) {
+  def streamFileSink(spark: SparkSession, dir: String): DataFrame = {
     val ev = EventStream.readEvents(spark, s"$dir/events.parquet")
       .select(col("event_id"), col("user_id"), col("event_type"),
         col("ts"), col("value"))
@@ -273,14 +249,13 @@ object StreamingQueries {
     val tag = math.abs(dir.hashCode).toString
     val out = s"$fileSinkDataBase/out_$tag"
     val chk = s"$fileSinkCkptBase/chk_$tag"
-    val q = ev.writeStream
+    val q = EventStream.startStream(spark, ev.writeStream
       .format("parquet")
       .option("path", out)
       .option("checkpointLocation", chk)
       .partitionBy("event_type")
       .outputMode(OutputMode.Append())
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
     q.awaitTermination()
     spark.read.parquet(out)
       .groupBy(col("event_type"))
@@ -329,7 +304,7 @@ object StreamingQueries {
     * (count/sum), same contract as q85. foreachBatch is where a real
     * deployment would issue MERGE INTO against a warehouse table
     * (jar-verified n/a offline — NOTES round-12). */
-  def streamIncrementalAgg(spark: SparkSession, dir: String): DataFrame = withStatePartitions(spark) {
+  def streamIncrementalAgg(spark: SparkSession, dir: String): DataFrame = {
     val ev = EventStream.readEvents(spark, s"$dir/events.parquet")
       .select(col("event_type"), col("value"))
     val tag = math.abs(dir.hashCode).toString
@@ -348,7 +323,7 @@ object StreamingQueries {
         else None
       }
     }
-    val q = ev.writeStream
+    val q = EventStream.startStream(spark, ev.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val ss = batch.sparkSession
         val partial = batch.groupBy(col("event_type"))
@@ -387,8 +362,7 @@ object StreamingQueries {
         ()
       }
       .option("checkpointLocation", chk)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
     q.awaitTermination()
     val (_, latest) = completeVersions(spark).maxBy(_._1)
     spark.read.parquet(latest)
@@ -414,7 +388,7 @@ object StreamingQueries {
     * Parity: "value above the type average" cross-multiplies to
     * exact decimals (value * n_t > sum_t) — never a double division
     * whose rounding could flip a flag between engines. */
-  def streamStaticEnrich(spark: SparkSession, dir: String): DataFrame = withStatePartitions(spark) {
+  def streamStaticEnrich(spark: SparkSession, dir: String): DataFrame = {
     val profile = graft.Tables.events(spark, dir)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_t"), sum(money(col("value"))).as("s_t"))
@@ -452,7 +426,7 @@ object StreamingQueries {
     * Scale: state is one 16-byte struct per user (high-cardinality
     * key → shards across executors); a deployment adds a
     * GroupStateTimeout eviction policy for departed keys. */
-  def streamRunningTotals(spark: SparkSession, dir: String): DataFrame = withStatePartitions(spark) {
+  def streamRunningTotals(spark: SparkSession, dir: String): DataFrame = {
     val ev = EventStream.readEvents(spark, s"$dir/events.parquet")
       .select(col("user_id"),
         (money(col("value")) * 100).cast("long").as("cents"))
@@ -479,7 +453,7 @@ object StreamingQueries {
     * Scale: append mode is THE bounded-state windowed shape — emitted
     * windows leave the store, so state holds only open windows
     * (watermark horizon x types), while Complete mode retains all. */
-  def streamFinalizedWindows(spark: SparkSession, dir: String): DataFrame = withStatePartitions(spark) {
+  def streamFinalizedWindows(spark: SparkSession, dir: String): DataFrame = {
     val ev = EventStream.readEvents(spark, s"$dir/events.parquet")
     val agg = EventStream.tumblingCounts(ev)
       .select(col("window_start"), col("event_type"), col("n"))
@@ -498,25 +472,20 @@ object StreamingQueries {
       |ORDER BY window_start, event_type""".stripMargin
 
   /** Q99: per-type running stats via the Spark-4 `transformWithState`
-    * API on the ROCKSDB state backend (the API requires it; the conf
-    * is scoped to this query start and restored, like the no-data
+    * API on the ROCKSDB state backend (the API requires it; runToTable
+    * scopes the provider to this query's start, like the no-data
     * flag). Two named ValueState variables per key; commutative folds
     * (count, max) so arrival order cannot change the answer; output
     * integer-only. RocksDB is also the backend a 100 TB deployment
     * runs — state spills to disk with changelog checkpointing instead
     * of living in executor heap like the HDFS-backed store. */
-  def streamTypeStats(spark: SparkSession, dir: String): DataFrame = withStatePartitions(spark) {
+  def streamTypeStats(spark: SparkSession, dir: String): DataFrame = {
     val ev = EventStream.readEvents(spark, s"$dir/events.parquet")
       .select(col("event_type"),
         (money(col("value")) * 100).cast("long").as("cents"))
-    val stats = EventStream.typeStats(ev)
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProv = spark.conf.get(provKey)
-    spark.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try EventStream.runToTable(stats, sinkName("stream_tws"), OutputMode.Update())
+    EventStream.runToTable(EventStream.typeStats(ev), sinkName("stream_tws"),
+        OutputMode.Update(), rocksDb = true)
       .orderBy(col("event_type"))
-    finally spark.conf.set(provKey, prevProv)
   }
 
   val streamTypeStatsSql: String =
@@ -542,7 +511,7 @@ object StreamingQueries {
     * q104's distinct-gram accounting; the oracle mirrors it. The only
     * state is the per-doc aggregate, keyed by high-cardinality doc_id
     * and bounded by the docs in flight. */
-  def streamDecontam(spark: SparkSession, dir: String): DataFrame = withStatePartitions(spark) {
+  def streamDecontam(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.TextFunctions.wordShingles
     val (indexPath, bloom) = Indexes.buildCorpusGramIndex(spark, dir)
     val index = spark.read.parquet(indexPath).withColumn("hit", lit(1))
@@ -807,7 +776,7 @@ object StreamingQueries {
     * partition, eviction by the interval condition); the outer flush
     * adds no state, only changes what eviction EMITS. At 100 TB the
     * watermark delay is the state-size knob, unchanged. */
-  def streamOuterJoin(spark: SparkSession, dir: String): DataFrame = withStatePartitions(spark) {
+  def streamOuterJoin(spark: SparkSession, dir: String): DataFrame = {
     val path = s"$dir/events.parquet"
     val clicks = EventStream.readEvents(spark, path)
       .filter(col("event_type") === "click")
@@ -874,7 +843,7 @@ object StreamingQueries {
     * Scale shape: q58's state layout; the full-outer flush changes
     * only what eviction EMITS on each side, never what is stored —
     * at 100 TB the watermark delay remains the state-size knob. */
-  def streamFullOuterJoin(spark: SparkSession, dir: String): DataFrame = withStatePartitions(spark) {
+  def streamFullOuterJoin(spark: SparkSession, dir: String): DataFrame = {
     val path = s"$dir/events.parquet"
     val clicks = EventStream.readEvents(spark, path)
       .filter(col("event_type") === "click")
@@ -952,7 +921,7 @@ object StreamingQueries {
     * cardinality, distributes across executors; the watermark bounds
     * open-session state exactly as in q40. One shuffle on user_id;
     * session merge is per-key state-store work, never a sort. */
-  def streamSessionWindow(spark: SparkSession, dir: String): DataFrame = withStatePartitions(spark) {
+  def streamSessionWindow(spark: SparkSession, dir: String): DataFrame = {
     val ev = EventStream.readEvents(spark, s"$dir/events.parquet")
     val agg = ev
       .withWatermark("ts", "1 hour")
@@ -1039,7 +1008,7 @@ object StreamingQueries {
     * Scale shape: dedup state is keyed by event_id (high-cardinality,
     * distributes across executors); the audit join is on the ≤5-row
     * per-type rollups. */
-  def streamRedelivery(spark: SparkSession, dir: String): DataFrame = withStatePartitions(spark) {
+  def streamRedelivery(spark: SparkSession, dir: String): DataFrame = {
     val root = redeliveryRoot(spark, dir)
     val ev = EventStream.readEvents(spark, root, maxFilesPerTrigger = Some(1))
     val deduped = EventStream.dedupRedelivery(ev, delay = "87600 hours")

@@ -600,6 +600,8 @@ object TextAnalysis {
   /** Number of merges q100 learns; the joiner marks a merged symbol so
     * it can never collide with (or re-match) its parts. */
   val BpeMerges = 6
+  /** Shuffle partitions of the merge-learning loop, sized to the sample. */
+  private val BpeLoopParts = 8
   /** Unit-separator joiner: a fused symbol can never equal a raw token
     * (space-split text cannot contain U+001F) nor its own `left` part —
     * the property greedy non-overlap rests on. */
@@ -631,10 +633,13 @@ object TextAnalysis {
     * holds, which is exactly the cap this distributed trainer removes;
     * pair counts concentrate fast, so a sample fixes the merge table.
     * The loop runs under a sample-sized shuffle-partition count
-    * (restored after — the withStatePartitions reasoning): every round
-    * pays per-partition scheduling for a count job plus a rewrite, so
-    * partitions track the SAMPLE, and a deployment training on more
-    * sizes them up with it.
+    * ([[BpeLoopParts]], scoped by [[graft.Session.withConf]]): every
+    * round pays per-partition scheduling for a count job plus a
+    * rewrite, so partitions track the SAMPLE, and a deployment training
+    * on more sizes them up with it. The conf, not an explicit
+    * `repartition(n, l, r)`, sets the width: the conf keeps the
+    * map-side partial count before the pair shuffle, which an explicit
+    * repartition would drop (bytes at scale for a local gain).
     *
     * The fuse is the compiled [[graft.functions.BpeApply]] kernel
     * (round-5; replaced the interpreted `aggregate` HOF). DuckDB
@@ -659,11 +664,8 @@ object TextAnalysis {
     * [[BpeMerges]]) — shared by q100 (which renders it as the result
     * frame) and q102 (which applies it to the full corpus). */
   private[graft] def learnMerges(spark: SparkSession,
-      corpus: DataFrame): Seq[(Long, String, String, Long)] = {
-    val key = "spark.sql.shuffle.partitions"
-    val prevParts = spark.conf.get(key)
-    spark.conf.set(key, "8")
-    try {
+      corpus: DataFrame): Seq[(Long, String, String, Long)] =
+    graft.Session.withConf(spark, "spark.sql.shuffle.partitions" -> BpeLoopParts.toString) {
     // The greedy-fuse invariant ("a fused symbol can never equal a raw
     // token") holds only if no corpus token carries the reserved
     // U+001F joiner; tokens() is a plain space split, so real text
@@ -702,7 +704,6 @@ object TextAnalysis {
       }
     }
     learned.result()
-    } finally spark.conf.set(key, prevParts)
   }
 
   /** Cross-process export dir for q102's per-doc token counts (the

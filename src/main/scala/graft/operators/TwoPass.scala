@@ -142,8 +142,8 @@ private[graft] object TwoPass {
     val (rows0, own) = cached(rows.filter(col("w") > 0))
     // try/finally (round-13, ADVICE r12): the kernel-owned persist must
     // be released even when a pass throws — otherwise the MEMORY_AND_DISK
-    // blocks leak for the session (only Bench/Verify run the periodic-GC
-    // remedy; PlanAudit, tests and embedding drivers do not).
+    // blocks leak for the session (every graft.Session runs the
+    // periodic-GC remedy; embedding drivers' own sessions need not).
     try {
     val nBuckets = spark.conf.get("spark.sql.shuffle.partitions").toInt.max(2)
     val bucketOf = scoreBuckets(rows0, col("c"), nBuckets)

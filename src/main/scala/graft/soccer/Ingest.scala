@@ -1,6 +1,6 @@
 package graft.soccer
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -122,12 +122,15 @@ object Ingest {
       .drop("league_name", "code")
   }
 
-  /** Run-level observability (A5, README.md:112): row/error counters
-    * attached via observe() — read from a QueryExecutionListener or the
-    * returned map after an action. */
-  def withMetrics(df: DataFrame): DataFrame =
-    df.observe("ingest_metrics",
+  /** Run-level observability (A5, README.md:112): row/error counters of
+    * a raw read ([[Normalize.readRaw]]) attached via observe() — `obs.get`
+    * returns them after the first action on the returned frame. The
+    * missing-required counter uses the warn side-output's own rule
+    * ([[Normalize.missingRequired]]), so the two cannot disagree. */
+  def withMetrics(df: DataFrame, obs: Observation): DataFrame =
+    df.observe(obs,
       count(lit(1)).as("n_rows"),
       count(col("_corrupt_record")).as("n_corrupt"),
-      count(when(col("matches").isNull && col("rounds").isNull, 1)).as("n_missing_required"))
+      count(when(col("_corrupt_record").isNull && Normalize.missingRequiredCond, 1))
+        .as("n_missing_required"))
 }

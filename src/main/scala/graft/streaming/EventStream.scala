@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 /** Structured Streaming surface (SURVEY §2.10).
@@ -26,8 +26,9 @@ import org.apache.spark.sql.types._
 object EventStream {
 
   /** events.parquet physical schema with `ts` read as a nanos long via
-    * the legacy conf — the pre-round-5 testdata layout (INT64
-    * TIMESTAMP(NANOS)); current files carry plain `timestamp[us]`. The
+    * the legacy conf [[graft.Session.local]] sets — the pre-round-5
+    * testdata layout (INT64 TIMESTAMP(NANOS)); current files carry
+    * plain `timestamp[us]`. The
     * stream source needs an explicit schema, so [[readEvents]] sniffs the
     * actual layout from the parquet footer (one metadata read) and picks
     * the matching variant. */
@@ -47,7 +48,6 @@ object EventStream {
     * its parent. */
   def readEvents(spark: SparkSession, path: String,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val streamPath =
       if (path.endsWith(".parquet")) {
         val slash = path.lastIndexOf('/')
@@ -236,10 +236,50 @@ object EventStream {
     p
   }
 
+  /** Shuffle partitions every harness stream starts with. Partition
+    * count is a state-volume knob, not a parallelism knob: every stateful
+    * operator pays a fixed per-partition cost per microbatch (state-store
+    * open/commit/snapshot — a stream-stream join keeps FOUR stores per
+    * partition), so at harness scale, where the state is a few MB, 32
+    * partitions are pure overhead (q58 spent ~5 s/run committing
+    * near-empty stores). A 100 TB deployment sizes it to keep each
+    * store's state in executor memory. */
+  val StateParts = 8
+
+  /** The RocksDB state backend (transformWithState requires it). */
+  val RocksDbProvider =
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  /** Start `writer` under the stream-start confs, scoped to `start()`
+    * alone: `start()` clones the session for the query, so the clone
+    * keeps [[StateParts]] (and `extra`) for the query's life while the
+    * shared session is restored before the stream runs. */
+  def startStream(spark: SparkSession, writer: DataStreamWriter[_],
+      extra: (String, String)*): StreamingQuery =
+    graft.Session.withConf(spark,
+        ("spark.sql.shuffle.partitions" -> StateParts.toString) +: extra: _*) {
+      writer.start()
+    }
+
   /** Run a streaming frame to completion into an in-memory table
     * (AvailableNow = the reference's run-per-trigger model) and return
     * the materialized result. Complete mode emits every window, so the
     * result matches the batch oracle exactly.
+    *
+    * Each query checkpoints under its own `checkpointBase/<name>`
+    * (queryNames are unique per invocation), set per query so no
+    * session conf can re-point a later, unrelated stream at it.
+    *
+    * The no-data microbatch is skipped unless `finalizeByWatermark`: it
+    * exists to finalize watermark-closed APPEND-mode windowed
+    * aggregates, and most harness queries don't emit through that path
+    * (q38/q61 run Complete; q39/q58/q40 emit on arrival) — for them it
+    * is one more state-store open/commit round per store for zero
+    * output. q97 DOES emit through it and passes finalizeByWatermark =
+    * true to keep the default behavior (also pinned on a default-config
+    * stream in StreamingSpec). Oracle-checked: results are
+    * batch-identical. `rocksDb` selects [[RocksDbProvider]] for this
+    * query (q99's transformWithState requires it).
     *
     * The result is materialized with an eager `localCheckpoint` (block-
     * manager storage, distributed across executors in cluster mode — no
@@ -248,44 +288,18 @@ object EventStream {
     * unreachable, unlike a `.cache()` which would grow the pinned cache
     * set by one entry per invocation for the process lifetime. */
   def runToTable(df: DataFrame, name: String, mode: OutputMode,
-      finalizeByWatermark: Boolean = false): DataFrame = {
+      finalizeByWatermark: Boolean = false, rocksDb: Boolean = false): DataFrame = {
     val spark = df.sparkSession
-    // both confs are read at query START and restored after: a leaked
-    // global checkpointLocation would silently re-point every LATER
-    // unrelated stream in this shared session (e.g. a spec's
-    // MemoryStream query) at a persistent per-queryName checkpoint,
-    // where a same-named restart resumes dead offsets instead of
-    // starting fresh
-    val ckptKey = "spark.sql.streaming.checkpointLocation"
-    val prevCkpt = spark.conf.getOption(ckptKey)
-    spark.conf.set(ckptKey, checkpointBase)
-    // Skip the trailing no-data microbatch for THIS query (the flag is
-    // read once at query start; restored after): it exists to finalize
-    // watermark-closed APPEND-mode windowed aggregates, and most
-    // harness queries don't emit through that path (q38/q61 run
-    // Complete; q39/q58/q40 emit on arrival) — for them it is one more
-    // state-store open/commit round per store for zero output. q97 DOES
-    // emit through it and passes finalizeByWatermark = true to keep the
-    // default behavior (also pinned on a default-config stream in
-    // StreamingSpec). Oracle-checked: results are batch-identical.
-    val noDataKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prevNoData = spark.conf.get(noDataKey)
-    spark.conf.set(noDataKey, finalizeByWatermark.toString)
-    val q =
-      try {
-        df.writeStream
-          .format("memory")
-          .queryName(name)
-          .outputMode(mode)
-          .trigger(Trigger.AvailableNow())
-          .start()
-      } finally {
-        spark.conf.set(noDataKey, prevNoData)
-        prevCkpt match {
-          case Some(p) => spark.conf.set(ckptKey, p)
-          case None => spark.conf.unset(ckptKey)
-        }
-      }
+    val writer = df.writeStream
+      .format("memory")
+      .queryName(name)
+      .outputMode(mode)
+      .option("checkpointLocation", s"$checkpointBase/$name")
+      .trigger(Trigger.AvailableNow())
+    val confs =
+      Seq("spark.sql.streaming.noDataMicroBatches.enabled" -> finalizeByWatermark.toString) ++
+        Option.when(rocksDb)("spark.sql.streaming.stateStore.providerClass" -> RocksDbProvider)
+    val q = startStream(spark, writer, confs: _*)
     q.awaitTermination()
     // Update-mode parity guard: the memory sink retains one row per
     // touched key PER BATCH, so batch-oracle equality relies on the

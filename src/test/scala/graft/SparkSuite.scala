@@ -3,8 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session for all specs: one local[4] JVM-wide SparkSession
-  * (getOrCreate), UTC, AQE on, shuffle partitions sized for local. */
+/** Shared session for all specs: one JVM-wide [[Session.local]] session
+  * at a fixed 4 threads, so the specs keep their width whatever
+  * `SPARK_GRAFT_CPUS` the run exports. */
 trait SparkSuite extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSuite.session
   val Sf0001 = "/root/testdata/sf0.001"
@@ -14,16 +15,5 @@ trait SparkSuite extends AnyFunSuite {
 }
 
 object SparkSuite {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val session: SparkSession = Session.local(cpus = 4)
 }

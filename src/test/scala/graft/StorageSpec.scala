@@ -216,7 +216,7 @@ class StorageSpec extends SparkSuite {
         else if (s.contains("cbo_customer")) "customer"
         else if (s.contains("cbo_nation")) "nation" else "?")
     val plain = leafTags()
-    val (cbo, leafRowCounts) = Storage.withCbo(spark) {
+    val (cbo, leafRowCounts) = Session.withConf(spark, Storage.CboConf: _*) {
       val df = spark.sql(Storage.cboStarText(o, c, n))
       val p = df.queryExecution.optimizedPlan
       (leafTags(), p.collectLeaves().map(_.stats.rowCount))

@@ -162,16 +162,15 @@ class StreamingSpec extends SparkSuite {
   test("q99 transformWithState carries both state variables across batches on RocksDB") {
     import spark.implicits._
     implicit val sq = spark.sqlContext
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProv = spark.conf.get(provKey)
-    spark.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val mem = MemoryStream[(String, Long)]
-      val events = mem.toDF().toDF("event_type", "cents")
-      val stats = EventStream.typeStats(events)
-      val q = stats.writeStream.format("memory")
+    val mem = MemoryStream[(String, Long)]
+    val events = mem.toDF().toDF("event_type", "cents")
+    val stats = EventStream.typeStats(events)
+    val q = Session.withConf(spark,
+        "spark.sql.streaming.stateStore.providerClass" -> EventStream.RocksDbProvider) {
+      stats.writeStream.format("memory")
         .queryName("tws_test").outputMode(OutputMode.Update()).start()
+    }
+    try {
       mem.addData(("click", 100L), ("click", 300L), ("view", 50L))
       q.processAllAvailable()
       val b1 = spark.table("tws_test").as[EventStream.TypeStats]
@@ -183,9 +182,8 @@ class StreamingSpec extends SparkSuite {
       val clicks = spark.table("tws_test").as[EventStream.TypeStats]
         .collect().filter(_.event_type == "click")
         .map(t => (t.n_events, t.max_cents)).toSet
-      q.stop()
       assert(clicks === Set((2L, 300L), (3L, 300L)))
-    } finally spark.conf.set(provKey, prevProv)
+    } finally q.stop()
   }
 
   test("dedupRedelivery drops in-watermark duplicate event_ids across batches") {

@@ -139,10 +139,9 @@ class NormalizeSpec extends SparkSuite {
 
   test("ingest metrics observe the error counts (A5)") {
     val obs = new org.apache.spark.sql.Observation("m")
-    val counted = raw.observe(obs,
-      count(lit(1)).as("n_rows"),
-      count(col("_corrupt_record")).as("n_corrupt"))
-    counted.collect()
-    assert(obs.get("n_corrupt") === 1L)
+    Ingest.withMetrics(raw, obs).collect()
+    // 4 records: bad.json (corrupt), noreq.json (missing required),
+    // de.1.json and en.1.json; empty.json holds none
+    assert(obs.get === Map("n_rows" -> 4L, "n_corrupt" -> 1L, "n_missing_required" -> 1L))
   }
 }
