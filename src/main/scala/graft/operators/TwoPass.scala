@@ -1,6 +1,8 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -40,22 +42,22 @@ private[graft] object TwoPass {
     * All kernel results are collected driver-side maps, so the
     * kernel-owned cache can always be released before returning. */
   private def cached(rows: DataFrame): (DataFrame, Boolean) = {
-    // A frame that is a checkpoint — or a pure column-level reshape of
-    // one (Project/Filter only) — re-scans in-memory blocks, so a second
-    // materialization would only duplicate storage.
-    def materialized(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Boolean =
-      p match {
-        case _: org.apache.spark.sql.execution.LogicalRDD => true
-        case pr: org.apache.spark.sql.catalyst.plans.logical.Project =>
-          materialized(pr.child)
-        case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-          materialized(f.child)
-        case _ => false
-      }
-    if (!materialized(rows.queryExecution.logical) &&
-        rows.storageLevel == StorageLevel.NONE)
+    if (!materialized(rows) && rows.storageLevel == StorageLevel.NONE)
       (rows.persist(StorageLevel.MEMORY_AND_DISK), true)
     else (rows, false)
+  }
+
+  /** True when `df` is a checkpoint — or a pure column-level reshape of
+    * one (Project/Filter only). Such a frame re-scans in-memory blocks,
+    * so materializing it again would only duplicate storage. */
+  private[graft] def materialized(df: DataFrame): Boolean = {
+    def rdd(p: LogicalPlan): Boolean = p match {
+      case _: LogicalRDD => true
+      case pr: Project => rdd(pr.child)
+      case f: Filter => rdd(f.child)
+      case _ => false
+    }
+    rdd(df.queryExecution.logical)
   }
 
   /** Bucket function for `value` with ~`nBuckets` balanced buckets.

@@ -47,11 +47,6 @@ object Ingest {
       .drop("__rn")
   }
 
-  /** Known-league whitelist filter (P8, main.yml:144-148): left-semi
-    * against the (broadcast) league map; unknown codes are skipped. */
-  def filterKnownLeagues(df: DataFrame, leagueMap: DataFrame): DataFrame =
-    df.join(broadcast(leagueMap.select("code")), Seq("code"), "left_semi")
-
   /** Idempotent load dedup (J3/A6, README.md:114): drop rows whose
     * lineage key already exists in the target (left anti), then drop
     * in-batch duplicates. */
@@ -80,24 +75,31 @@ object Ingest {
   def leagueConfigJson(leagueMap: DataFrame): DataFrame =
     leagueMap.select(to_json(struct(col("code"), col("league"))).as("json"))
 
-  /** The full ingest job (SURVEY §3.1): both workflow passes composed as
-    * ONE Spark plan over `repoRoot/<seasonDir>/<file>.json`.
+  /** The full ingest job (SURVEY §3.1): both workflow passes composed
+    * over `repoRoot/<seasonDir>/<file>.json`.
     *
     *   pass 1  league map: prefix regex -> first-wins display name
     *   pass 2  validate (corrupt / missing-required side-outputs),
     *           latest-version-per-(season,prefix) via sort -V window,
-    *           known-league whitelist, normalize, stage
+    *           known-league whitelist + display name, normalize, stage
     *
-    * Returns the normalized, league-joined frame; callers stage it with
-    * [[writePartitioned]]. Control flow the workflow does per-file
-    * becomes set operations: one scan, one broadcast, one window
-    * shuffle — the EP1 lifecycle traced in SURVEY §3.1. */
+    * Control flow the workflow does per-file becomes set operations, and
+    * each is paid once per run: one file listing on the driver
+    * ([[Normalize.readRaw]]), one JSON parse into a checkpoint that feeds
+    * both passes, one window shuffle, one broadcast of the league map —
+    * an inner join that is the whitelist (P8: unknown codes yield no
+    * rows) and the name lookup at once, since the map has one row per
+    * code. The result comes back materialized (an eager checkpoint too),
+    * so the staging write ([[writePartitioned]]) and the idempotent
+    * re-load ([[dedupAgainst]]) read its rows instead of re-running the
+    * plan. */
   def run(spark: SparkSession, repoRoot: String, sourceCommit: String): DataFrame = {
     // localCheckpoint, not .cache(): repeated run() calls in a long
     // session would each pin one cache entry forever, while checkpoint
-    // blocks free via the ContextCleaner once the returned frame is
-    // unreachable (the runToTable discipline). Eager is fine — raw is
-    // the ingest sample, and two passes (league map + valid) follow.
+    // blocks free via the ContextCleaner once the frame is unreachable
+    // (the runToTable discipline). Both checkpoints are row-scale per
+    // run, bounded by the upstream corpus (SCALE.md); the result's cuts
+    // the lineage, so the raw blocks become unreachable once run returns.
     val raw = Normalize.readRaw(spark, repoRoot + "/*/*.json").localCheckpoint(true)
     val leagueMap = buildLeagueMap(raw)
     // valid = parseable rows passing the SAME required-fields rule the
@@ -108,8 +110,7 @@ object Ingest {
       .withColumn("season_dir",
         element_at(split(col("source_file"), "/"), -2))
     val latest = latestVersionPerKey(valid, Seq("season_dir", "code"), "source_file")
-    val known = filterKnownLeagues(latest, leagueMap)
-    Normalize.normalize(known, sourceCommit)
+    Normalize.normalize(latest, sourceCommit)
       .withColumn("code", leagueCode(col("source_file")))
       // season fallback chain ends at the directory-derived year
       // (main.yml:111-115): record field > name suffix > season dir
@@ -117,9 +118,10 @@ object Ingest {
         coalesce(col("season"),
           seasonYear(element_at(split(col("source_file"), "/"), -2))))
       .join(broadcast(leagueMap.withColumnRenamed("league", "league_name")),
-        Seq("code"), "left")
-      .withColumn("league", coalesce(col("league_name"), col("league")))
+        Seq("code"), "inner")
+      .withColumn("league", col("league_name"))
       .drop("league_name", "code")
+      .localCheckpoint(true)
   }
 
   /** Run-level observability (A5, README.md:112): row/error counters of

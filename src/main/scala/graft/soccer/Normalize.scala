@@ -3,6 +3,9 @@ package graft.soccer
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Session
+import graft.operators.TwoPass
+
 import Schemas._
 
 /** The ParseMatches port (reference README.md:200-220) as pure Column
@@ -17,15 +20,25 @@ import Schemas._
 object Normalize {
 
   /** Read raw openfootball JSON (one object per file) with the explicit
-    * schema, PERMISSIVE mode + corrupt-record capture (P5/P6). */
-  def readRaw(spark: SparkSession, glob: String): DataFrame =
-    spark.read
+    * schema, PERMISSIVE mode + corrupt-record capture (P5/P6).
+    *
+    * The glob is expanded on the driver, which already lists every
+    * matched directory; past 32 leaf paths Spark would list those files
+    * again as a one-task-per-file job (96 tasks, 0.6-0.9 s per read on
+    * the benchmark corpus on a 4-vCPU VM, NOTES.md). Raising the discovery threshold
+    * for the one call that resolves the files keeps that listing on the
+    * driver; paths and `input_file_name` values are unchanged. */
+  def readRaw(spark: SparkSession, glob: String): DataFrame = {
+    val reader = spark.read
       .option("multiLine", true)
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", "_corrupt_record")
       .schema(rawSchema)
-      .json(glob)
-      .withColumn("source_file", input_file_name())
+    Session.withConf(spark,
+        "spark.sql.sources.parallelPartitionDiscovery.threshold" -> Int.MaxValue.toString) {
+      reader.json(glob)
+    }.withColumn("source_file", input_file_name())
+  }
 
   /** Parse raw records from in-memory JSON strings (same schema/modes as
     * [[readRaw]]) — for embedded demos and tests. */
@@ -49,9 +62,14 @@ object Normalize {
     * entry per call would outlive the caller (the runToTable leak
     * shape), while checkpoint blocks free once the frame is
     * unreachable. Fine here (ingest inputs are small); a 100 TB
-    * pipeline would persist the parsed frame and route errors from it. */
-  def corruptRecords(raw: DataFrame): DataFrame =
-    raw.localCheckpoint(true).filter(col("_corrupt_record").isNotNull)
+    * pipeline would persist the parsed frame and route errors from it.
+    * A `raw` that is already a checkpoint (a caller that also derives
+    * [[missingRequired]] from it passes one) has no JSON scan left to
+    * refuse, so it is filtered as it is. */
+  def corruptRecords(raw: DataFrame): DataFrame = {
+    val parsed = if (TwoPass.materialized(raw)) raw else raw.localCheckpoint(true)
+    parsed.filter(col("_corrupt_record").isNotNull)
+  }
 
   /** The required-fields rule (main.yml:132-134, P7), shared between the
     * warn side-output and the ingest valid-row filter so the two can

@@ -1,12 +1,41 @@
 package graft.soccer
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.{Window => WindowNode}
+import org.apache.spark.sql.execution.{CommandResultExec, FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.datasources.{FileFormat, HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.json.JsonFileFormat
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.{Seconds, Span}
 
 import graft.SparkSuite
 import graft.functions.TextFunctions.naturalSortKey
 
 class IngestSpec extends SparkSuite {
   import spark.implicits._
+
+  /** One openfootball record (layout B) with a single played match. */
+  private def matchFile(name: String, home: String, away: String): String =
+    s"""{"name": "$name", "matches": [{"round": "Matchday 1", "date": "2011-08-13",""" +
+      s""" "team1": "$home", "team2": "$away", "score": {"ft": [1, 0]}}]}"""
+
+  /** A repo root holding `files` (relative path -> content). */
+  private def writeRepo(files: Seq[(String, String)]): String = {
+    val root = java.nio.file.Files.createTempDirectory("graft_repo")
+    files.foreach { case (rel, content) =>
+      val path = root.resolve(rel)
+      java.nio.file.Files.createDirectories(path.getParent)
+      java.nio.file.Files.writeString(path, content)
+    }
+    root.toString
+  }
 
   test("league map build: first-wins, season suffix stripped (D1-D3, D8)") {
     val raw = Normalize.readRaw(spark, fixturePath("2011-12") + "/*.json")
@@ -50,10 +79,14 @@ class IngestSpec extends SparkSuite {
   }
 
   test("known-league whitelist skips unknown codes (P8)") {
-    val files = Seq(("en", "a"), ("xx", "b")).toDF("code", "file")
-    val lm = Seq(("en", "EPL")).toDF("code", "league")
-    val kept = Ingest.filterKnownLeagues(files, lm).as[(String, String)].collect()
-    assert(kept === Array(("en", "a")))
+    // 99.json has no letter prefix, so no league code the map can know
+    val root = writeRepo(Seq(
+      "2011-12/en.1.json" -> matchFile("English Premier League 2011/12", "A", "B"),
+      "2011-12/99.json" -> matchFile("Mystery League 2011/12", "C", "D")))
+    val rows = Ingest.run(spark, root, sourceCommit = "shaX")
+      .select($"league", $"team_home", $"source_file").as[(String, String, String)].collect()
+    assert(rows.map(r => (r._1, r._2)) === Array(("English Premier League", "A")))
+    assert(rows.forall(_._3.endsWith("/en.1.json")))
   }
 
   test("dedup against existing is idempotent (J3/A6, README.md:114)") {
@@ -81,6 +114,76 @@ class IngestSpec extends SparkSuite {
     // league name resolved through the built map (season suffix stripped)
     assert(rows.forall(_.getAs[String]("league") === "English Premier League"))
     assert(rows.forall(_.getAs[String]("source_commit") === "shaX"))
+  }
+
+  test("readRaw resolves a >32-file glob on the driver: no job, same rows as per-directory reads") {
+    val seasons = Seq("2011-12", "2012-13", "2013-14")
+    val root = writeRepo(for (season <- seasons; i <- 1 to 12)
+      yield s"$season/en.$i.json" -> matchFile(s"English Premier League $season", s"H$i", s"A$i"))
+    val confBefore = spark.conf.getAll
+    var globbed: DataFrame = null
+    assert(jobsStarted { globbed = Normalize.readRaw(spark, root + "/*/*.json") } === 0)
+    assert(spark.conf.getAll === confBefore)
+    val perDir = seasons.map(s => Normalize.readRaw(spark, s"$root/$s/*.json")).reduce(_ union _)
+    val rows = globbed.collect()
+    assert(rows.length === 36)
+    assert(rows.toSet === perDir.collect().toSet)
+    assert(rows.map(_.getAs[String]("source_file")).toSet ===
+      perDir.select("source_file").as[String].collect().toSet)
+  }
+
+  test("staging write and idempotent re-load read the run's rows, not the JSON") {
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: ((p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case c: CommandResultExec => Seq(c.commandPhysicalPlan)
+      case _ => Nil
+    }) ++ p.children).flatMap(nodes)
+    // file scans of the physical plan, and of the logical plan too: AQE
+    // may fold a finished branch into an empty relation that hides them
+    def formats(qe: QueryExecution): Seq[FileFormat] =
+      nodes(qe.executedPlan).collect { case s: FileSourceScanExec => s.relation.fileFormat } ++
+        qe.optimizedPlan.collectLeaves().collect {
+          case l: LogicalRelation if l.relation.isInstanceOf[HadoopFsRelation] =>
+            l.relation.asInstanceOf[HadoopFsRelation].fileFormat
+        }
+    def scansJson(qe: QueryExecution) = formats(qe).exists(_.isInstanceOf[JsonFileFormat])
+    // the detector sees the JSON scan of an unmaterialized read
+    val raw = Normalize.readRaw(spark, fixturePath("versions") + "/*/*.json")
+    raw.count()
+    assert(scansJson(raw.queryExecution))
+
+    val staged = Ingest.run(spark, fixturePath("versions"), sourceCommit = "shaX")
+    val out = java.nio.file.Files.createTempDirectory("graft_stage").toString
+    val keys = Seq("league", "season", "round", "team_home", "team_away", "match_date")
+    val runs = new java.util.concurrent.ConcurrentLinkedQueue[(String, QueryExecution)]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        runs.add(funcName -> qe)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val added = try {
+      Ingest.writePartitioned(staged, out)
+      val n = Ingest.dedupAgainst(staged, spark.read.parquet(out), keys).count()
+      // listeners hear of executions in order: the count comes last
+      eventually(timeout(Span(30, Seconds))) {
+        assert(runs.asScala.exists(_._1 == "count"))
+      }
+      n
+    } finally spark.listenerManager.unregister(listener)
+    assert(added === 0)
+    val all = runs.asScala.toSeq
+    assert(all.exists(r => nodes(r._2.executedPlan).exists(_.isInstanceOf[DataWritingCommandExec])),
+      all.map(_._1))
+    all.foreach { case (name, qe) =>
+      assert(!scansJson(qe), s"$name: ${qe.executedPlan}")
+      // nor re-run the run's plan: its version window is gone
+      assert(!qe.optimizedPlan.exists(_.isInstanceOf[WindowNode]), s"$name: ${qe.optimizedPlan}")
+    }
+    // the re-load does read the staged parquet back
+    assert(all.exists { case (name, qe) =>
+      name == "count" && formats(qe).exists(_.isInstanceOf[ParquetFileFormat]) })
   }
 
   test("league config emit escapes JSON natively (D10, main.yml:87)") {

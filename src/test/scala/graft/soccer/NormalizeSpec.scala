@@ -1,6 +1,6 @@
 package graft.soccer
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
@@ -14,6 +14,13 @@ class NormalizeSpec extends SparkSuite {
     val corrupt = Normalize.corruptRecords(raw)
     assert(corrupt.count() === 1)
     assert(corrupt.head().getAs[String]("source_file").endsWith("bad.json"))
+  }
+
+  test("corruptRecords filters a checkpointed raw as it is: no checkpoint job, same rows") {
+    val checkpointed = raw.localCheckpoint(true)
+    var corrupt: DataFrame = null
+    assert(jobsStarted { corrupt = Normalize.corruptRecords(checkpointed) } === 0)
+    assert(corrupt.collect().toSet === Normalize.corruptRecords(raw).collect().toSet)
   }
 
   test("missing required fields are detected (P7)") {
