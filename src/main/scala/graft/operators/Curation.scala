@@ -1572,11 +1572,12 @@ object Curation {
   }
 
   def bigramSurprisal(spark: SparkSession, dir: String): DataFrame = {
-    // localCheckpoint: the rank kernel makes two more passes (histogram
-    // + pruned fetch) and the report a third — lazily each would replay
-    // the whole explode->join->agg pipeline (the q129 trap; measured
-    // 5.1 s -> 1.4 s at sf0.1). The materialized frame is |docs| rows
-    // of four narrow columns, executor-local blocks.
+    // localCheckpoint: the rank kernel reads the frame once (one task
+    // below TwoPass.OneTaskRows, three passes above it) and the report
+    // once more — lazily each read would replay the whole
+    // explode->join->agg pipeline (the q129 trap; measured 5.1 s ->
+    // 1.4 s at sf0.1). The materialized frame is |docs| rows of four
+    // narrow columns, executor-local blocks.
     val perDoc = bigramPerDoc(spark, dir).localCheckpoint()
     val gr = TwoPass.groupRankLookup(spark,
       perDoc.select(lit("all").as("k"), col("mean6").as("c")),

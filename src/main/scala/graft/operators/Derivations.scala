@@ -659,15 +659,17 @@ object Derivations {
     * depth.
     *
     * Scale shape: boundaries from the shared
-    * [[TwoPass.groupRankLookup]] kernel (single group, never a global
-    * sort); true counts are B conditional sums fused into ONE
+    * [[TwoPass.groupRankLookup]] kernel (single group: one bounded
+    * task up to [[TwoPass.OneTaskRows]] rows, never a global sort
+    * above it); true counts are B conditional sums fused into ONE
     * aggregation against the boundary literals (the q158 pattern —
     * never a rows×buckets theta-join). */
   def equiDepthHistogram(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val b = HistogramBuckets
     // round-12: one lineitem scan — the 1-column cents proxy is
-    // checkpointed once for the kernel's passes AND the true-count agg
+    // checkpointed once for the kernel (one task below its bound, three
+    // passes above it) AND the true-count agg
     val rows = Tables.lineitem(spark, dir).select(
       (col("l_extendedprice").cast("decimal(18,2)") * 100)
         .cast("decimal(18,0)").cast("long").as("c"))

@@ -159,9 +159,10 @@ object Quality {
     import graft.functions.Parity._
     import spark.implicits._
     // round-12: the kernel lazily persists the (k, c) proxy across its
-    // own passes (TwoPass.cached); an eager caller-side checkpoint
-    // measured WORSE here (scan-only lineage — the extra materialize
-    // job costs more than the two parquet re-scans it saves)
+    // own reads (TwoPass.cached: one task below its bound, three passes
+    // above it); an eager caller-side checkpoint measured WORSE here
+    // (scan-only lineage — the extra materialize job costs more than
+    // the parquet re-scan it saves)
     def rows = Tables.events(spark, dir).select(col("event_type").as("et"),
       (col("value").cast("decimal(18,2)") * 100).cast("decimal(18,0)")
         .cast("long").as("c"))

@@ -1640,8 +1640,11 @@ object Relational {
     * Scale shape: extendedprice is QUASI-CONTINUOUS — the distinct-
     * value "histogram" is row-scale, so the q212 bounded-frame
     * argument does not apply and a per-flag cumulative window would
-    * be a single-task row-scale sort (measured 3.0 s at sf0.1, and
-    * fatal at 100×). Runs on [[TwoPass.groupWeightedMedian]] instead:
+    * be an unbounded single-task row-scale sort (the drafted window
+    * measured 3.0 s at sf0.1, and is fatal at 100×). Runs on
+    * [[TwoPass.groupWeightedMedian]] instead: up to
+    * [[TwoPass.OneTaskRows]] rows (sf0.1 has 6·10⁵) ONE bounded task
+    * sorts each flag and scans its cumulative weight; above that,
     * sampled balance-only buckets, one map-side-combined (flag,
     * bucket) weight histogram (bounded driver frame), and a
     * cumulative window over ONLY the one wanted bucket's slice per

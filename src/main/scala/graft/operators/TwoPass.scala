@@ -1,9 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 /** Shared first pass of the distributed two-pass rank family
@@ -23,11 +24,12 @@ private[graft] object TwoPass {
     * optimization, guide §5: caching pays exactly when a frame is
     * reused and recomputing it is dearer than holding it).
     *
-    * Every kernel in this file walks its input THREE times (boundary
-    * sketch, bounded histogram, pruned fetch); without this, each walk
-    * re-runs the input's whole lineage — a parquet scan plus the
-    * caller's projection/join chain, three times per call (and q147
-    * pays it twice over). The input is always the narrow (k, c[, w])
+    * Both kernels first probe their input with the one-task finish
+    * ([[oneTask]]); an input above its bound is then walked THREE more
+    * times (boundary sketch, bounded histogram, pruned fetch). Without
+    * this, each walk re-runs the input's whole lineage — a parquet scan
+    * plus the caller's projection/join chain, per pass (and q147 pays
+    * it twice over). The input is always the narrow (k, c[, w])
     * proxy — a few fixed-width columns, never payloads — so the
     * materialized footprint is the cheap side of the guide §8 rule:
     * decide over small rows, move them once. MEMORY_AND_DISK spills
@@ -40,11 +42,15 @@ private[graft] object TwoPass {
     * `own = false` — so a shared cache is not dropped from under the
     * caller and a checkpointed frame is not duplicated into storage.
     * All kernel results are collected driver-side maps, so the
-    * kernel-owned cache can always be released before returning. */
-  private def cached(rows: DataFrame): (DataFrame, Boolean) = {
-    if (!materialized(rows) && rows.storageLevel == StorageLevel.NONE)
-      (rows.persist(StorageLevel.MEMORY_AND_DISK), true)
-    else (rows, false)
+    * kernel-owned cache is always released before returning, also
+    * when a pass throws (round-13, ADVICE r12: otherwise the
+    * MEMORY_AND_DISK blocks leak for the session — every graft.Session
+    * runs the periodic-GC remedy; embedding drivers' own sessions need
+    * not). */
+  private def cached[T](rows: DataFrame)(kernel: DataFrame => T): T = {
+    val own = !materialized(rows) && rows.storageLevel == StorageLevel.NONE
+    val frame = if (own) rows.persist(StorageLevel.MEMORY_AND_DISK) else rows
+    try kernel(frame) finally if (own) frame.unpersist(false)
   }
 
   /** True when `df` is a checkpoint — or a pure column-level reshape of
@@ -96,60 +102,160 @@ private[graft] object TwoPass {
         org.apache.spark.sql.GraftSqlShim.expression(c.cast("double")), bnds))
   }
 
+  /** Row budget of the one-task finish ([[oneTask]]): a kernel input of
+    * at most this many rows is answered exactly inside ONE task; above
+    * it the sampled-sketch, histogram and pruned-fetch passes run
+    * distributed. Set from timings of both paths on `local[4]` (see
+    * SCALE.md, rank kernels) and capped at 10^6 rows, so the task's
+    * buffers stay bounded (under 40 MB of primitive arrays) whatever
+    * the input. Not a conf: specs pass 0 to force the distributed
+    * path. */
+  private[graft] val OneTaskRows = 1000000L
+
+  /** Rows the kernels rank: a null key or value has no rank (a null
+    * `c` would otherwise count towards `n` while its bucket never
+    * matches the fetch join, shifting every later rank). */
+  private def ranked(rows: DataFrame): DataFrame =
+    rows.filter(col("k").isNotNull && col("c").isNotNull)
+
+  /** Answers of [[oneTask]], one row per (group, wanted rank) or per
+    * group: the group's size (or total weight) `n`, a rank `r` (null
+    * for a per-group answer) and the value `v` there. A row with a null
+    * `k` is the overflow marker. */
+  private val answerSchema = StructType(Seq(StructField("k", StringType),
+    StructField("n", LongType), StructField("r", LongType), StructField("v", LongType)))
+
+  /** The shared one-task finish of both kernels: ONE `coalesce(1)` task
+    * reads the (k, c[, w]) rows and stops after `bound + 1` of them.
+    * Within the bound it lays the rows out group by group in primitive
+    * arrays and `answer(k, c, w, from, until)` computes the group's
+    * exact answers from its slice (`w` is null when unweighted); only
+    * those answer rows leave the task. Past the bound it returns the
+    * overflow marker and this returns None, so the caller runs the
+    * distributed passes over the same persisted frame.
+    *
+    * `coalesce`, not `repartition`: it is narrow, so the task stops
+    * reading early; a shuffle would move every row first. Probing the
+    * kernel's cached frame means an overflow has computed only the
+    * first cached partitions, and the passes reuse them. */
+  private def oneTask(rows: DataFrame, weighted: Boolean, bound: Long)(
+      answer: (String, Array[Long], Array[Long], Int, Int) => Iterator[Row])
+      : Option[Array[Row]] = {
+    val cols = if (weighted) Seq(col("k"), col("c"), col("w")) else Seq(col("k"), col("c"))
+    val out = rows.select(cols: _*).coalesce(1).mapPartitions { it =>
+      val groupOf = new java.util.HashMap[String, Integer]
+      val keys = scala.collection.mutable.ArrayBuffer.empty[String]
+      var gs = new Array[Int](1024)
+      var cs = new Array[Long](1024)
+      var ws = if (weighted) new Array[Long](1024) else null
+      var n = 0
+      while (n <= bound && it.hasNext) {
+        val row = it.next()
+        if (n == gs.length) {
+          val len = 2 * n
+          gs = java.util.Arrays.copyOf(gs, len)
+          cs = java.util.Arrays.copyOf(cs, len)
+          if (weighted) ws = java.util.Arrays.copyOf(ws, len)
+        }
+        val k = row.getString(0)
+        var g = groupOf.get(k)
+        if (g == null) { g = keys.length; groupOf.put(k, g); keys += k }
+        gs(n) = g
+        cs(n) = row.getLong(1)
+        if (weighted) ws(n) = row.getLong(2)
+        n += 1
+      }
+      if (n > bound) Iterator.single(Row(null, null, null, null))
+      else {
+        // counting sort by group: group g owns [start(g), start(g + 1))
+        val start = new Array[Int](keys.length + 1)
+        (0 until n).foreach(i => start(gs(i) + 1) += 1)
+        (1 to keys.length).foreach(g => start(g) += start(g - 1))
+        val next = java.util.Arrays.copyOf(start, keys.length)
+        val c = new Array[Long](n)
+        val w = if (weighted) new Array[Long](n) else null
+        (0 until n).foreach { i =>
+          val j = next(gs(i))
+          next(gs(i)) += 1
+          c(j) = cs(i)
+          if (weighted) w(j) = ws(i)
+        }
+        keys.indices.iterator.flatMap(g => answer(keys(g), c, w, start(g), start(g + 1)))
+      }
+    }(Encoders.row(answerSchema)).collect()
+    if (out.exists(_.isNullAt(0))) None else Some(out)
+  }
+
   /** Per-group answer of [[groupRankLookup]]: the group size and the
     * exact value at each requested 1-based global rank. */
   final case class GroupRanks(n: Long, at: Map[Long, Long])
 
-  /** Distributed targeted-rank lookup (q141's kernel, shared with q147):
-    * for each group in `rows` — columns `k: string`, `c: long` — fetch
-    * the exact value at each global rank `ranksFor(groupSize)` returns,
-    * WITHOUT ever sorting a whole group in one task (the scale hazard a
-    * per-group rank window carries at 100 TB).
-    *
-    * Shape: sampled balance-only buckets ([[scoreBuckets]]), ONE
-    * map-side-combined (k, bucket) histogram collected to the driver
-    * (bounded: |groups| × buckets rows), driver locates the bucket +
-    * local rank of every wanted value, then one pruned fetch joins only
-    * the wanted buckets (broadcast want-list) and row_numbers WITHIN a
-    * bucket — the only per-group sort is over one bucket's slice.
-    * Exactness is independent of boundary quality: offsets come from
-    * real counts, the sketch only balances. */
   /** Distributed WEIGHTED median (q224's kernel): for each group in
     * `rows` — columns `k: string`, `c: long` (value), `w: long`
     * (weight) — the total weight W and the smallest value whose
     * inclusive cumulative weight cum satisfies 2·cum ≥ W (the lower
     * weighted median), WITHOUT a per-group sort over the distinct
-    * values — on quasi-continuous value domains (prices) the distinct
-    * frame is row-scale, so the q212 "bounded histogram" argument
-    * does NOT apply and a per-group cumulative window would be a
-    * single-task row-scale sort (the exact hazard [[groupRankLookup]]
-    * exists to avoid).
+    * values once the input outgrows one task — on quasi-continuous
+    * value domains (prices) the distinct frame is row-scale, so the
+    * q212 "bounded histogram" argument does NOT apply and a per-group
+    * cumulative window would be a single-task row-scale sort (the
+    * exact hazard [[groupRankLookup]] exists to avoid).
     *
-    * Shape: sampled balance-only buckets, ONE map-side-combined
-    * (k, bucket) WEIGHT histogram collected to the driver (bounded:
-    * |groups| × buckets), driver turns the weighted threshold into a
-    * (bucket, local residual threshold) per group, then one pruned
-    * fetch runs the cumulative-weight window over the single wanted
-    * bucket's slice only. Exact for any boundary quality: equal
-    * values never straddle a bucket (scoreBuckets invariant), and
-    * thresholds come from real weights, not the sketch. */
-  def groupWeightedMedian(spark: SparkSession,
+    * Rows with a null key or value, or a weight that is not positive,
+    * are dropped first (a zero-total group would otherwise be kept in
+    * `totals` but skipped from `wants`, making med(k) throw); a group
+    * with NO positive weight simply has no median and is omitted.
+    *
+    * Shape: an input of at most `oneTaskRows` rows is answered by
+    * [[oneTask]] (per group: sorted distinct values, their summed
+    * weights, one cumulative scan). Above it: sampled balance-only
+    * buckets, ONE map-side-combined (k, bucket) WEIGHT histogram
+    * collected to the driver (bounded: |groups| × buckets), driver
+    * turns the weighted threshold into a (bucket, local residual
+    * threshold) per group, then one pruned fetch runs the
+    * cumulative-weight window over the single wanted bucket's slice
+    * only. Exact for any boundary quality: equal values never straddle
+    * a bucket (scoreBuckets invariant), and thresholds come from real
+    * weights, not the sketch. */
+  def groupWeightedMedian(spark: SparkSession, rows: DataFrame,
+      oneTaskRows: Long = OneTaskRows): Map[String, (Long, Long)] =
+    cached(rows) { frame =>
+      val live = ranked(frame).filter(col("w") > 0)
+      oneTask(live, weighted = true, oneTaskRows)(weightedMedianOf) match {
+        case Some(out) => out.map(r => r.getString(0) -> (r.getLong(1), r.getLong(3))).toMap
+        case None => weightedMedianBuckets(spark, live)
+      }
+    }
+
+  /** [[oneTask]] answer of [[groupWeightedMedian]] for one group's
+    * slice: total weight and lower weighted median. */
+  private val weightedMedianOf: (String, Array[Long], Array[Long], Int, Int) => Iterator[Row] =
+    (k, c, w, from, until) => {
+      val vs = java.util.Arrays.copyOfRange(c, from, until)
+      java.util.Arrays.sort(vs)
+      var m = 0 // distinct values land in vs(0 until m)
+      vs.indices.foreach { i => if (i == 0 || vs(i) != vs(m - 1)) { vs(m) = vs(i); m += 1 } }
+      val acc = new Array[Long](m)
+      (from until until).foreach { i =>
+        acc(java.util.Arrays.binarySearch(vs, 0, m, c(i))) += w(i)
+      }
+      val total = acc.sum
+      val r = (total + 1) / 2 // smallest integer with 2r >= W
+      var cum = 0L
+      var i = 0
+      while (cum + acc(i) < r) { cum += acc(i); i += 1 }
+      Iterator.single(Row(k, total, null, vs(i)))
+    }
+
+  /** The distributed passes of [[groupWeightedMedian]] over the
+    * kernel's persisted, filtered frame. */
+  private def weightedMedianBuckets(spark: SparkSession,
       rows: DataFrame): Map[String, (Long, Long)] = {
     import org.apache.spark.sql.expressions.Window
     import spark.implicits._
-    // Precondition: weights are positive. Non-positive-weight rows are
-    // dropped up front (a zero-total group would otherwise be kept in
-    // `totals` but skipped from `wants`, making med(k) throw); a group
-    // with NO positive weight simply has no median and is omitted.
-    val (rows0, own) = cached(rows.filter(col("w") > 0))
-    // try/finally (round-13, ADVICE r12): the kernel-owned persist must
-    // be released even when a pass throws — otherwise the MEMORY_AND_DISK
-    // blocks leak for the session (every graft.Session runs the
-    // periodic-GC remedy; embedding drivers' own sessions need not).
-    try {
     val nBuckets = spark.conf.get("spark.sql.shuffle.partitions").toInt.max(2)
-    val bucketOf = scoreBuckets(rows0, col("c"), nBuckets)
-    val hist = rows0.withColumn("b", bucketOf(col("c")))
+    val bucketOf = scoreBuckets(rows, col("c"), nBuckets)
+    val hist = rows.withColumn("b", bucketOf(col("c")))
       .groupBy(col("k"), col("b")).agg(sum(col("w")).cast("long").as("n"))
       .collect()
     val wants = Seq.newBuilder[(String, Int, Long)] // (k, b, local threshold)
@@ -166,15 +272,17 @@ private[graft] object TwoPass {
     val wantDf = wants.result().toDF("wk", "wb", "lt")
     val cw = Window.partitionBy(col("k"), col("b")).orderBy(col("c"))
       .rowsBetween(Window.unboundedPreceding, 0)
-    val med = rows0.withColumn("b", bucketOf(col("c")))
+    // the join leaves one wanted bucket per group, so grouping by
+    // (k, b) is grouping by k — and the window's (k, b) partitioning
+    // already satisfies it: no second exchange
+    val med = rows.withColumn("b", bucketOf(col("c")))
       .join(broadcast(wantDf), col("k") === col("wk") && col("b") === col("wb"))
       .withColumn("cum", sum(col("w")).over(cw))
       .filter(col("cum") >= col("lt"))
-      .groupBy(col("k")).agg(min(col("c")).as("m"))
+      .groupBy(col("k"), col("b")).agg(min(col("c")).as("m"))
       .collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
+      .map(r => r.getString(0) -> r.getLong(2)).toMap
     totals.flatMap { case (k, w) => med.get(k).map(m => k -> (w, m)) }.toMap
-    } finally if (own) rows0.unpersist(false)
   }
 
   /** Measured NON-change (round-13, VERDICT r12 task 3): a two-pass
@@ -190,34 +298,53 @@ private[graft] object TwoPass {
     * the bucket histogram below shares its boundary/count work across
     * ALL ranks of a group at one hash-agg update per row. Small-group
     * single-rank consumers were flat (q141 0.97x, q147 1.02x, q246
-    * 1.00x). The sampled-sketch bucket path is the right shape at any
-    * scale for this mixed consumer set; kept as the sole
-    * implementation, with PropertySpec pinning it against a
-    * driver-side exact sort (ties, skew, out-of-range ranks).
+    * 1.00x). The sampled-sketch bucket path is the right shape above
+    * one task for this mixed consumer set, with PropertySpec pinning
+    * it against a driver-side exact sort (ties, skew, out-of-range
+    * ranks).
     *
-    * Distributed targeted-rank lookup: for each group in `rows` —
-    * columns `k: string`, `c: long` — fetch the exact value at each
-    * global rank `ranksFor(groupSize)` returns, WITHOUT ever sorting a
-    * whole group in one task. Sampled balance-only buckets
+    * Distributed targeted-rank lookup (q141's kernel, shared with
+    * q147): for each group in `rows` — columns `k: string`,
+    * `c: long` — fetch the exact value at each global rank
+    * `ranksFor(groupSize)` returns (out-of-range ranks are skipped),
+    * WITHOUT ever sorting a whole group in one task once the input
+    * outgrows one. Rows with a null key or value are dropped first.
+    * An input of at most `oneTaskRows` rows is answered by
+    * [[oneTask]] (per group: a sort, then the rank picks; `ranksFor`
+    * then runs in that task). Above it: sampled balance-only buckets
     * ([[scoreBuckets]]), ONE map-side-combined (k, bucket) histogram
-    * collected to the driver (bounded: |groups| x buckets rows), driver
-    * locates the bucket + local rank of every wanted value, then one
-    * pruned fetch joins only the wanted buckets (broadcast want-list)
-    * and row_numbers WITHIN a bucket. Exactness is independent of
-    * boundary quality: offsets come from real counts, the sketch only
-    * balances. */
-  def groupRankLookup(spark: SparkSession, rows0: DataFrame,
-      ranksFor: Long => Seq[Long]): Map[String, GroupRanks] = {
-    val (rows, own) = cached(rows0)
-    try groupRankLookupBuckets(spark, rows, ranksFor)
-    finally if (own) rows.unpersist(false)
-  }
+    * collected to the driver (bounded: |groups| x buckets rows),
+    * driver locates the bucket + local rank of every wanted value,
+    * then one pruned fetch joins only the wanted buckets (broadcast
+    * want-list) and row_numbers WITHIN a bucket. Exactness is
+    * independent of boundary quality: offsets come from real counts,
+    * the sketch only balances. */
+  def groupRankLookup(spark: SparkSession, rows: DataFrame,
+      ranksFor: Long => Seq[Long],
+      oneTaskRows: Long = OneTaskRows): Map[String, GroupRanks] =
+    cached(rows) { frame =>
+      val live = ranked(frame)
+      val pick: (String, Array[Long], Array[Long], Int, Int) => Iterator[Row] =
+        (k, c, _, from, until) => {
+          java.util.Arrays.sort(c, from, until)
+          val n = (until - from).toLong
+          Iterator.single(Row(k, n, null, null)) ++
+            ranksFor(n).distinct.iterator.filter(r => r >= 1 && r <= n)
+              .map(r => Row(k, n, r, c(from + (r - 1).toInt)))
+        }
+      oneTask(live, weighted = false, oneTaskRows)(pick) match {
+        case Some(out) => out.groupBy(_.getString(0)).map { case (k, rs) =>
+          k -> GroupRanks(rs.head.getLong(1),
+            rs.filterNot(_.isNullAt(2)).map(r => r.getLong(2) -> r.getLong(3)).toMap)
+        }
+        case None => rankLookupBuckets(spark, live, ranksFor)
+      }
+    }
 
-  /** The bucket implementation (sampled boundaries → bounded histogram
-    * → pruned window fetch). `rows` is the already-cached frame; the
-    * caller's try/finally owns its release. Package-visible so the spec
-    * can drive it directly. */
-  private[graft] def groupRankLookupBuckets(spark: SparkSession, rows: DataFrame,
+  /** The distributed passes of [[groupRankLookup]] (sampled boundaries
+    * → bounded histogram → pruned window fetch) over the kernel's
+    * persisted, filtered frame. */
+  private def rankLookupBuckets(spark: SparkSession, rows: DataFrame,
       ranksFor: Long => Seq[Long]): Map[String, GroupRanks] = {
     import org.apache.spark.sql.expressions.Window
     import spark.implicits._

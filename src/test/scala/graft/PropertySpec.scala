@@ -202,32 +202,108 @@ class PropertySpec extends SparkSuite {
     // every-decile). Exactness must be independent of sketch quality —
     // the ground truth is a driver-side sort. (The round-13 two-pass GK
     // variant was proven exact by this same pin and then reverted on
-    // measurement — see TwoPass.groupRankLookup's header.)
+    // measurement — see TwoPass.groupRankLookup's header.) Both paths
+    // run: bound 0 forces the bucket passes, the default bound answers
+    // in one task. Rows with a null key or value have no rank.
     val rng = new scala.util.Random(42)
     val data = (0 until 5).flatMap { g =>
       val size = Seq(1, 7, 100, 1733, 5000)(g)
       val domain = Seq(1, 3, 10, 40, 100000)(g)
-      (0 until size).map(_ => (s"g$g", (rng.nextInt(domain) + 1).toLong))
+      (0 until size).map(_ => (s"g$g", Option((rng.nextInt(domain) + 1).toLong)))
     }
-    val df = spark.createDataFrame(data).toDF("k", "c")
+    val df = (data ++ Seq((null, Some(2L)), ("g2", None), ("g4", None)))
+      .toDF("k", "c")
     val rankFns: Seq[Long => Seq[Long]] = Seq(
       n => Seq(math.max(n / 2, 1L), math.max((n + 1) / 2, 1L)),
       n => Seq(1L, n, n + 5L, 0L, -3L), // out-of-range ranks must be skipped
       n => (1L to 10L).map(d => math.max(d * n / 10, 1L)))
     val exact = data.groupBy(_._1).map { case (k, rows) =>
-      k -> rows.map(_._2).sorted
+      k -> rows.flatMap(_._2).sorted
     }
-    rankFns.foreach { ranksFor =>
-      val got = operators.TwoPass.groupRankLookup(spark, df, ranksFor)
+    for (bound <- Seq(0L, operators.TwoPass.OneTaskRows); ranksFor <- rankFns) {
+      val got = operators.TwoPass.groupRankLookup(spark, df, ranksFor, bound)
+      assert(got.keySet === exact.keySet, s"bound $bound")
       got.foreach { case (k, gr) =>
         val sorted = exact(k)
         assert(gr.n === sorted.length.toLong, k)
         val wanted = ranksFor(gr.n).distinct.filter(r => r >= 1 && r <= gr.n)
         assert(gr.at.keySet === wanted.toSet, k)
         gr.at.foreach { case (r, v) =>
-          assert(v === sorted((r - 1).toInt), s"$k rank $r")
+          assert(v === sorted((r - 1).toInt), s"$k rank $r bound $bound")
         }
       }
+    }
+  }
+
+  test("groupWeightedMedian: both paths == exact weighted median (ties, skew, weights, nulls)") {
+    // ground truth: per group, the smallest value whose inclusive
+    // cumulative weight reaches half the positive total (2·cum >= W);
+    // null keys/values and non-positive weights take no part
+    val rng = new scala.util.Random(7)
+    def group(k: String, size: Int, domain: Int, maxW: Int) = (0 until size).map(_ =>
+      (k, Option((rng.nextInt(domain) - domain / 2).toLong),
+        Option((rng.nextInt(maxW) + 1).toLong)))
+    val data = group("ties", 300, 3, 5) ++ group("skew", 4000, 100000, 10) ++
+      group("one", 1, 10, 3) ++ group("pair", 2, 1000, 1) ++
+      Seq(("half", Some(1L), Some(2L)), ("half", Some(2L), Some(2L)), // 2·cum = W exactly
+        ("signs", Some(5L), Some(0L)), ("signs", Some(1L), Some(-4L)),
+        ("signs", Some(9L), Some(3L)), ("signs", Some(3L), Some(1L)),
+        ("nonpos", Some(4L), Some(0L)), ("nonpos", Some(6L), Some(-1L)),
+        (null, Some(1L), Some(1L)), ("ties", None, Some(50L)), ("skew", Some(3L), None))
+    val exact = data.collect { case (k, Some(c), Some(w)) if k != null && w > 0 => (k, c, w) }
+      .groupBy(_._1).map { case (k, rs) =>
+        val sorted = rs.sortBy(_._2)
+        val total = rs.map(_._3).sum
+        val cum = sorted.scanLeft(0L)(_ + _._3).tail
+        k -> (total, sorted(cum.indexWhere(2 * _ >= total))._2)
+      }
+    assert(!exact.contains("nonpos") && exact("signs") === ((4L, 9L)))
+    val df = data.toDF("k", "c", "w")
+    val empty = df.filter(lit(false))
+    for (bound <- Seq(0L, operators.TwoPass.OneTaskRows)) {
+      assert(operators.TwoPass.groupWeightedMedian(spark, df, bound) === exact, s"bound $bound")
+      assert(operators.TwoPass.groupWeightedMedian(spark, empty, bound).isEmpty)
+      assert(operators.TwoPass.groupRankLookup(spark, empty.select("k", "c"),
+        n => Seq(1L), bound).isEmpty)
+    }
+  }
+
+  test("rank kernels: a scan-only input under the bound answers in 1 job") {
+    val rows = spark.range(0, 20000, 1, 4).select(
+      (col("id") % 7).cast("string").as("k"), (col("id") * 31 % 1000).as("c"),
+      (col("id") % 5 + 1).as("w"))
+    assert(jobsStarted {
+      operators.TwoPass.groupRankLookup(spark, rows.select("k", "c"), n => Seq(1L, n))
+    } === 1)
+    assert(jobsStarted { operators.TwoPass.groupWeightedMedian(spark, rows) } === 1)
+  }
+
+  test("rank kernels: both paths leave no persisted frame or conf change, also on a throw") {
+    import org.apache.spark.storage.StorageLevel
+    val rows = (0 until 400).map(i => (s"g${i % 3}", i.toLong, 1L + i % 2)).toDF("k", "c", "w")
+    // the input's lineage raises on one row: every path evaluates it
+    val failing = rows.withColumn("c",
+      when(col("c") === 250L, raise_error(lit("boom"))).otherwise(col("c")))
+    val sc = spark.sparkContext
+    val confBefore = spark.conf.getAll
+    val rddsBefore = sc.getPersistentRDDs.keySet
+    def leftClean(inputs: org.apache.spark.sql.DataFrame*): Unit = {
+      inputs.foreach(in => assert(in.storageLevel === StorageLevel.NONE))
+      assert(sc.getPersistentRDDs.keySet.subsetOf(rddsBefore))
+      assert(spark.conf.getAll === confBefore)
+    }
+    val kc = rows.select("k", "c")
+    val failingKc = failing.select("k", "c")
+    for (bound <- Seq(0L, operators.TwoPass.OneTaskRows)) {
+      operators.TwoPass.groupRankLookup(spark, kc, n => Seq(n), bound)
+      operators.TwoPass.groupWeightedMedian(spark, rows, bound)
+      leftClean(kc, rows)
+      intercept[Exception](operators.TwoPass.groupRankLookup(spark, kc,
+        _ => throw new IllegalStateException("boom"), bound))
+      intercept[Exception](operators.TwoPass.groupRankLookup(spark, failingKc,
+        n => Seq(n), bound))
+      intercept[Exception](operators.TwoPass.groupWeightedMedian(spark, failing, bound))
+      leftClean(kc, failingKc, failing)
     }
   }
 }
