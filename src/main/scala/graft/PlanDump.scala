@@ -35,8 +35,8 @@ object PlanDump {
     val internals: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)] = Seq(
       "internal_q183_perdoc" -> ((s: SparkSession, d: String) =>
         graft.operators.Curation.bigramPerDoc(s, d)),
-      "internal_q265_winnow_select" -> ((s: SparkSession, d: String) =>
-        graft.operators.TextAnalysis.winnowSelect(Tables.documents(s, d))))
+      "internal_q265_winnow_postings" -> ((s: SparkSession, d: String) =>
+        graft.operators.TextAnalysis.winnowPostings(Tables.documents(s, d))))
     val selected = (SparkEntry.queries.toSeq ++ internals).sortBy(_._1)
       .filter { case (n, _) => names.forall(_.exists(matches(_, n))) }
     selected.foreach { case (name, fn) =>

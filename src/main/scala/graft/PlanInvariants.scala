@@ -232,15 +232,6 @@ object PlanInvariants {
       // itemsetLattice) — same exchange budget, plus nothing: the
       // maximality flags are map-side literals over the same frame
       "q292_maximal_itemsets" -> 8,
-      // q265's winnowing chain: the doc-partitioned selection window,
-      // the selected-position distinct, then TWO independent rollups
-      // off the selection frame (per-doc totals → per-source totals;
-      // per-(source,hash,doc) distinct → per-(source,hash) collision
-      // counts → per-source fingerprint totals) + the bounded join
-      // and output sort. After the distinct every exchange carries
-      // selection-density rows (~2/(w+1) of gram scale) or
-      // |sources|-bounded frames
-      "q265_winnowing" -> 6,
       // q277 pays one pushdown-pruned distinct per FIXED flag branch
       // (3 — each feeding a distributed TakeOrdered bottom-k) plus the
       // two-stage exact-count-distinct audit; every post-distinct

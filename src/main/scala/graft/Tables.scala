@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquetShim
 
 /** Loaders for the driver's parquet testdata (TESTDATA.md).
   *
@@ -11,7 +12,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Tables {
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    parquet(spark, s"$sfDir/$name.parquet")
+
+  /** `spark.read.parquet(path)` without its schema-inference Spark job.
+    * The driver reads the one footer that inference would read in a
+    * one-task job (GraftParquetShim) and hands the schema to the
+    * reader; the frame's schema and rows are the inferred read's. Any
+    * path the shim declines (missing, partitioned, empty, schema
+    * merging on) goes to Spark's inference, errors included. */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    GraftParquetShim.inferredSchema(spark, path)
+      .fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
 
   def region(s: SparkSession, d: String): DataFrame     = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = table(s, d, "nation")

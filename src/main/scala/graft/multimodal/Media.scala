@@ -118,15 +118,14 @@ object Media {
       .withColumn("frame_idx",
         explode(sequence(lit(0L), col("n_frames") - 1, lit(every.toLong))))
       .withColumn("frame",
-        substring_index_bytes(col("content"), col("frame_idx"), frameBytes))
+        substring_index_bytes(frameBytes))
       .select(col("asset_id"), col("kind"), col("n_frames"),
         col("frame_idx"), col("frame"))
   }
 
-  /** substring on binary with a Column start offset (frame_idx *
-    * frameBytes), 1-based. */
-  private def substring_index_bytes(content: org.apache.spark.sql.Column,
-      frameIdx: org.apache.spark.sql.Column, frameBytes: Int) =
+  /** substring of the binary `content` column with a Column start
+    * offset (`frame_idx` * frameBytes), 1-based. */
+  private def substring_index_bytes(frameBytes: Int) =
     expr(s"substring(content, cast(frame_idx * $frameBytes + 1 as int), $frameBytes)")
 
   /** Blob-batch bound for [[stagedBlobRoot]]: caps the staged file

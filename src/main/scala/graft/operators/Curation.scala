@@ -1154,7 +1154,6 @@ object Curation {
     * only division is the final dec6 waste ratio (padded > 0 always:
     * every batch has ≥ 1 doc of ≥ 1 token). */
   def lengthBucketBatches(spark: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("source"), col("bucket")).orderBy(col("doc_id"))
     Tables.documents(spark, dir).filter(col("text").isNotNull)
       .select(col("doc_id"), col("source"), tokenCount(col("text")).as("n_tokens"))
       .withColumn("bucket", expr(s"(n_tokens - 1) div $BandTokens"))
@@ -2308,7 +2307,7 @@ object Curation {
     * COUNT(DISTINCT) over the exploded rows (no Expand rewrite, one
     * corpus-scale shuffle of fixed-width keys total). */
   def ragChunking(spark: SparkSession, dir: String): DataFrame = {
-    val w = lit(ChunkTokens); val s = lit(ChunkStride)
+    val w = lit(ChunkTokens)
     val docs = Tables.documents(spark, dir)
       .filter(col("text").isNotNull)
       .select(col("doc_id"), col("source"), tokens(col("text")).as("toks"))

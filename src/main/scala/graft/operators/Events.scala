@@ -1299,7 +1299,6 @@ object Events {
     * sort); the summary agg is one map-side-combined pass over the
     * conversions frame. */
   def conversionLatency(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
     val w = Window.partitionBy(col("user_id"))
       .orderBy(col("ts_ns"), col("event_id"))
       .rowsBetween(Window.unboundedPreceding, -1)

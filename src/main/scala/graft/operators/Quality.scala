@@ -729,7 +729,6 @@ object Quality {
       .agg(count(lit(1)).as("cnt"),
         sum(when(col("pos"), 1L).otherwise(0L)).as("np"))
     val ord = Window.orderBy(col("score"))
-    val all = Window.partitionBy()
     def d(c: Column) = c.cast("decimal(38,0)")
     byScore
       .withColumn("cum_prev",

@@ -50,7 +50,7 @@ object Soccer {
     * intermediate is written to [[normalizedExportPath]] and the
     * standings are computed from the READ-BACK bytes, so the Spark result
     * and the DuckDB oracle aggregate the identical materialized rows. */
-  def pipeline(spark: SparkSession, dir: String): DataFrame = {
+  def pipeline(spark: SparkSession): DataFrame = {
     import spark.implicits._
     val raw = Normalize.fromJsonStrings(spark, sampleRecords)
     val aliases = sampleAliases.toDF("alias", "canonical")
@@ -101,7 +101,7 @@ object Soccer {
       |FROM ranked ORDER BY league, season, rank""".stripMargin
 
   def queries: Map[String, Relational.Q] = Map(
-    "q36_soccer_pipeline" -> (pipeline _),
+    "q36_soccer_pipeline" -> ((s: SparkSession, _: String) => pipeline(s)),
   )
 
   def oracles: Map[String, String] = Map(

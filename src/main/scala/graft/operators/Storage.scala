@@ -84,7 +84,7 @@ object Storage {
     * bucketed layout is the warehouse-side twin of q47's partition
     * pruning. StorageSpec asserts the exchange-free plan; values are
     * oracle-checked against the unbucketed source. */
-  private[graft] def bucketedNames(spark: SparkSession, dir: String): (String, String) = {
+  private[graft] def bucketedNames(dir: String): (String, String) = {
     // one table pair per (process, sf dir): Verify and Bench reuse them
     // across invocations instead of rewriting per query call
     val tag = s"${ProcessHandle.current().pid()}_${math.abs(dir.hashCode)}"
@@ -92,7 +92,7 @@ object Storage {
   }
 
   def bucketedJoin(spark: SparkSession, dir: String): DataFrame = {
-    val (ordersT, customerT) = bucketedNames(spark, dir)
+    val (ordersT, customerT) = bucketedNames(dir)
     // guard on BOTH tables: a build that died between the two
     // saveAsTable calls must rebuild, not serve the torso forever
     if (!spark.catalog.tableExists(ordersT) || !spark.catalog.tableExists(customerT)) {

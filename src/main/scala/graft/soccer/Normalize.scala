@@ -1,5 +1,6 @@
 package graft.soccer
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -27,16 +28,27 @@ object Normalize {
     * again as a one-task-per-file job (96 tasks, 0.6-0.9 s per read on
     * the benchmark corpus on a 4-vCPU VM, NOTES.md). Raising the discovery threshold
     * for the one call that resolves the files keeps that listing on the
-    * driver; paths and `input_file_name` values are unchanged. */
+    * driver; paths and `input_file_name` values are unchanged.
+    *
+    * The glob itself is expanded here with `FileSystem.globStatus`, as
+    * Spark would, and the matched paths are passed on: given exactly one
+    * path, Spark probes it for a streaming sink's metadata directory,
+    * and a literal glob fails that probe with a logged stack trace. A
+    * glob that matches nothing is passed as it is, so Spark raises its
+    * own path-not-found error. */
   def readRaw(spark: SparkSession, glob: String): DataFrame = {
     val reader = spark.read
       .option("multiLine", true)
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", "_corrupt_record")
       .schema(rawSchema)
+    val pattern = new Path(glob)
+    val fs = pattern.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val matched = Option(fs.globStatus(pattern)).toSeq.flatten.map(_.getPath.toString)
+    val paths = if (matched.isEmpty) Seq(glob) else matched
     Session.withConf(spark,
         "spark.sql.sources.parallelPartitionDiscovery.threshold" -> Int.MaxValue.toString) {
-      reader.json(glob)
+      reader.json(paths: _*)
     }.withColumn("source_file", input_file_name())
   }
 
@@ -48,7 +60,7 @@ object Normalize {
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", "_corrupt_record")
       .schema(rawSchema)
-      .json(rows.toDS)
+      .json(rows.toDS())
       .withColumn("source_file", lit("inline"))
   }
 

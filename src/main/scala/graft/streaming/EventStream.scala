@@ -30,8 +30,8 @@ object EventStream {
     * testdata layout (INT64 TIMESTAMP(NANOS)); current files carry
     * plain `timestamp[us]`. The
     * stream source needs an explicit schema, so [[readEvents]] sniffs the
-    * actual layout from the parquet footer (one metadata read) and picks
-    * the matching variant. */
+    * actual layout from the parquet footer (one driver-side metadata
+    * read, no Spark job) and picks the matching variant. */
   val eventsRawSchema: StructType = StructType(Seq(
     StructField("event_id", LongType),
     StructField("ts", LongType),
@@ -53,7 +53,7 @@ object EventStream {
         val slash = path.lastIndexOf('/')
         path.substring(0, slash + 1) + "{" + path.substring(slash + 1) + "}"
       } else path
-    val fileSchema = spark.read.parquet(path).schema
+    val fileSchema = graft.Tables.parquet(spark, path).schema
     val rawSchema = StructType(eventsRawSchema.map { f =>
       if (f.name == "ts") f.copy(dataType = fileSchema("ts").dataType) else f
     })

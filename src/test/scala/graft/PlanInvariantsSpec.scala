@@ -52,4 +52,26 @@ class PlanInvariantsSpec extends SparkSuite {
     }
     assert(PlanInvariants.audit(heavy).shuffles > PlanInvariants.defaultShuffleCeiling)
   }
+
+  /** Spark jobs one execution of a registered query starts at sf0.001,
+    * construct plus a `noop` write, once its artifacts are built: the
+    * per-query job ceiling. Each pin is the count measured when it was
+    * set; a rise means a new driver-side action or listing. The comment
+    * gives the count from when every table read inferred its schema in
+    * a Spark job and q265 read its raw selection twice. */
+  private val jobCeiling = Map(
+    "q162_golden_records" -> 8, // 9
+    "q224_weighted_median" -> 2, // 3
+    "q265_winnowing" -> 5) // 9
+
+  test("multistage queries start exactly their pinned Spark job counts") {
+    val counts = jobCeiling.keys.map { name =>
+      val q = SparkEntry.queries(name)
+      def run(): Unit =
+        q(spark, Sf0001).write.format("noop").mode("overwrite").save()
+      run() // builds the query's artifacts
+      name -> jobsStarted(run())
+    }.toMap
+    assert(counts === jobCeiling)
+  }
 }

@@ -264,7 +264,7 @@ class PropertySpec extends SparkSuite {
       assert(operators.TwoPass.groupWeightedMedian(spark, df, bound) === exact, s"bound $bound")
       assert(operators.TwoPass.groupWeightedMedian(spark, empty, bound).isEmpty)
       assert(operators.TwoPass.groupRankLookup(spark, empty.select("k", "c"),
-        n => Seq(1L), bound).isEmpty)
+        _ => Seq(1L), bound).isEmpty)
     }
   }
 

@@ -195,7 +195,7 @@ class QualitySpec extends SparkSuite {
     got.foreach { r =>
       val cs = byType(r.getString(0))
       val n = cs.length.toLong
-      def lowerMedian(xs: Seq[Long]): Long = xs.sorted.apply(((xs.length + 1) / 2 - 1))
+      def lowerMedian(xs: Array[Long]): Long = xs.sorted.apply(((xs.length + 1) / 2 - 1))
       val med = lowerMedian(cs)
       val mad = lowerMedian(cs.map(c => math.abs(c - med)))
       assert(r.getLong(1) === n, r)

@@ -241,7 +241,7 @@ class RelationalSpec extends SparkSuite {
       .sortBy { case (pk, c) => (-c, pk) }
     val total = perPart.map(_._2).sum
     var cumPrev = 0L
-    val classified = perPart.map { case (pk, c) =>
+    val classified = perPart.map { case (_, c) =>
       val cls = if (cumPrev * 5 < total * 4) "A"
         else if (cumPrev * 20 < total * 19) "B" else "C"
       cumPrev += c

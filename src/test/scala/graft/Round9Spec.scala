@@ -466,7 +466,7 @@ class Round9Spec extends SparkSuite {
     val (xs, ys) = (bottomK(0), bottomK(1))
     def l1(a: Array[Long], b: Array[Long]) =
       a.zip(b).map { case (p, q) => math.abs(p - q) }.sum
-    def pairSum(as: Seq[Array[Long]], bs: Seq[Array[Long]]) =
+    def pairSum(as: Array[Array[Long]], bs: Array[Array[Long]]) =
       as.map(a => bs.map(b => l1(a, b)).sum).sum
     assert(r.getAs[Long]("sum_dxy") === pairSum(xs, ys), "xy sum diverged")
     assert(r.getAs[Long]("sum_dxx") === pairSum(xs, xs), "xx sum diverged")

@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{CommandResultExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.time.{Seconds, Span}
@@ -14,6 +16,15 @@ trait SparkSuite extends AnyFunSuite {
 
   def fixturePath(rel: String): String =
     getClass.getResource("/fixtures/" + rel).getPath
+
+  /** Every node of a physical plan, through AQE's wrappers (the
+    * adaptive plan, its query stages) and a command's inner plan. */
+  def planNodes(p: SparkPlan): Seq[SparkPlan] = p +: ((p match {
+    case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+    case q: QueryStageExec => Seq(q.plan)
+    case c: CommandResultExec => Seq(c.commandPhysicalPlan)
+    case _ => Nil
+  }) ++ p.children).flatMap(planNodes)
 
   /** Spark jobs `body` starts, counted through a job group. The status
     * store hears of jobs over the listener bus in order, so once a

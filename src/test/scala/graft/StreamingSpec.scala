@@ -449,4 +449,11 @@ class StreamingSpec extends SparkSuite {
       assert(resumed === single, s"$phase: ${resumed.size} vs ${single.size}")
     }
   }
+
+  test("readEvents starts no Spark job before its stream starts") {
+    var ev: org.apache.spark.sql.DataFrame = null
+    assert(jobsStarted { ev = EventStream.readEvents(spark, s"$Sf0001/events.parquet") } === 0)
+    assert(ev.isStreaming)
+    assert(ev.columns.toSet === Tables.events(spark, Sf0001).columns.toSet)
+  }
 }

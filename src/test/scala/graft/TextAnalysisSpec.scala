@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.TextAnalysis
 
@@ -268,8 +269,8 @@ class TextAnalysisSpec extends SparkSuite {
       assert(r.getAs[Long]("n_docs") > 0, r)
     }
     // per-doc export agrees with the aggregate the query returned
-    val export = spark.read.parquet(TextAnalysis.tokenizedExportPath(Sf0001))
-    val total = export.agg(sum("n_tokens_after")).head().getLong(0)
+    val exported = spark.read.parquet(TextAnalysis.tokenizedExportPath(Sf0001))
+    val total = exported.agg(sum("n_tokens_after")).head().getLong(0)
     assert(total === out.map(_.getAs[Long]("tokens_after")).sum)
   }
 
@@ -381,5 +382,63 @@ class TextAnalysisSpec extends SparkSuite {
     assert(got.nonEmpty, s"term '$term' absent at sf0.001 — degenerate")
     // every context actually contains the term
     got.foreach { case (_, _, ctx) => assert(ctx.split(" ").contains(term)) }
+  }
+
+  /** The q265 report as two rollups straight over the winnowing
+    * selection: per-doc then per-source totals, and distinct
+    * (source, hash, doc) then per-source fingerprint totals, joined. */
+  private def winnowReportFromSelection(sel: DataFrame): DataFrame = {
+    val totals = sel.groupBy(col("source"), col("doc_id"), col("n_grams"))
+      .agg(count(lit(1)).as("n_sel"))
+      .groupBy(col("source"))
+      .agg(count(lit(1)).cast("long").as("n_docs"),
+        sum(col("n_grams")).cast("long").as("n_grams"),
+        sum(col("n_sel")).cast("long").as("n_selected"))
+    val fpTotals = sel.select(col("source"), col("sh"), col("doc_id")).distinct()
+      .groupBy(col("source"), col("sh")).agg(count(lit(1)).as("nd"))
+      .groupBy(col("source"))
+      .agg(count(lit(1)).cast("long").as("n_fp_distinct"),
+        sum(when(col("nd") > 1, 1L).otherwise(0L)).cast("long").as("n_fp_shared"))
+    totals.join(fpTotals, Seq("source"))
+      .withColumn("density", graft.functions.Parity.dec6(
+        col("n_selected").cast("decimal(18,0)") / col("n_grams")))
+      .select(col("source"), col("n_docs"), col("n_grams"), col("n_selected"),
+        col("density"), col("n_fp_distinct"), col("n_fp_shared"))
+      .orderBy(col("source"))
+  }
+
+  test("q265 posting-index report equals the two-rollup report over the selection") {
+    import spark.implicits._
+    // Round9Spec's shared-substring pair, plus docs whose selections
+    // repeat a hash (runs of one char), a doc too short to hold one
+    // full window, and a second source sharing a substring
+    val shared = "QWERTYUIOPA"
+    val fixture = Seq(
+      (1L, "s", "aaaaaaaaaaaaaaaa" + shared + "bbbbbbbbbbbbbbbb"),
+      (2L, "s", "cccccccccc" + shared + "dddddddddddddddddddddd"),
+      (3L, "s", "a" * 40),
+      (4L, "t", "zzzzzzzzzzzzzzzzzzzz" + shared + "zzzzzzzzzzzzzzzzzzzz"),
+      (5L, "t", "short"),
+      (6L, "t", "xyxyxyxyxyxyxyxyxyxyxyxyxyxy"))
+      .toDF("doc_id", "source", "text")
+    Seq("fixture" -> fixture, "sf0.001" -> Tables.documents(spark, Sf0001)).foreach {
+      case (what, docs) =>
+        val got = TextAnalysis.winnowReport(TextAnalysis.winnowPostings(docs))
+        val want = winnowReportFromSelection(TextAnalysis.winnowSelect(docs))
+        assert(got.schema === want.schema, what)
+        assert(got.collect().toSeq === want.collect().toSeq, what)
+    }
+  }
+
+  test("q265 serve scans its posting index once") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    val out = TextAnalysis.winnowingFingerprints(spark, Sf0001)
+    assert(out.collect().nonEmpty)
+    val scans = planNodes(out.queryExecution.executedPlan)
+      .collect { case s: FileSourceScanExec => s }
+    assert(scans.length === 1, scans.map(_.nodeName))
+    assert(scans.head.relation.location.rootPaths.map(_.getName) ===
+      Seq(new org.apache.hadoop.fs.Path(Scratch.artifactPath("winnow_post", Sf0001,
+        s"_k${TextAnalysis.WinnowK}w${TextAnalysis.WinnowW}")).getName))
   }
 }

@@ -4,13 +4,11 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.{Window => WindowNode}
-import org.apache.spark.sql.execution.{CommandResultExec, FileSourceScanExec, QueryExecution, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
 import org.apache.spark.sql.execution.command.DataWritingCommandExec
 import org.apache.spark.sql.execution.datasources.{FileFormat, HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.json.JsonFileFormat
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.concurrent.Eventually._
 import org.scalatest.time.{Seconds, Span}
@@ -130,19 +128,23 @@ class IngestSpec extends SparkSuite {
     assert(rows.toSet === perDir.collect().toSet)
     assert(rows.map(_.getAs[String]("source_file")).toSet ===
       perDir.select("source_file").as[String].collect().toSet)
+    // the scan reads exactly the 36 matched files, and each row names its own
+    val written = (for (season <- seasons; i <- 1 to 12)
+      yield new java.io.File(s"$root/$season/en.$i.json").getCanonicalPath).toSet
+    def local(uri: String) = new java.io.File(new java.net.URI(uri)).getCanonicalPath
+    assert(globbed.inputFiles.map(local).toSet === written)
+    assert(rows.map(r => local(r.getAs[String]("source_file"))).toSet === written)
+    // a glob that matches nothing fails as Spark fails it
+    val none = intercept[org.apache.spark.sql.AnalysisException](
+      Normalize.readRaw(spark, root + "/*/*.yaml"))
+    assert(none.getCondition === "PATH_NOT_FOUND")
   }
 
   test("staging write and idempotent re-load read the run's rows, not the JSON") {
-    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: ((p match {
-      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-      case q: QueryStageExec => Seq(q.plan)
-      case c: CommandResultExec => Seq(c.commandPhysicalPlan)
-      case _ => Nil
-    }) ++ p.children).flatMap(nodes)
     // file scans of the physical plan, and of the logical plan too: AQE
     // may fold a finished branch into an empty relation that hides them
     def formats(qe: QueryExecution): Seq[FileFormat] =
-      nodes(qe.executedPlan).collect { case s: FileSourceScanExec => s.relation.fileFormat } ++
+      planNodes(qe.executedPlan).collect { case s: FileSourceScanExec => s.relation.fileFormat } ++
         qe.optimizedPlan.collectLeaves().collect {
           case l: LogicalRelation if l.relation.isInstanceOf[HadoopFsRelation] =>
             l.relation.asInstanceOf[HadoopFsRelation].fileFormat
@@ -174,7 +176,7 @@ class IngestSpec extends SparkSuite {
     } finally spark.listenerManager.unregister(listener)
     assert(added === 0)
     val all = runs.asScala.toSeq
-    assert(all.exists(r => nodes(r._2.executedPlan).exists(_.isInstanceOf[DataWritingCommandExec])),
+    assert(all.exists(r => planNodes(r._2.executedPlan).exists(_.isInstanceOf[DataWritingCommandExec])),
       all.map(_._1))
     all.foreach { case (name, qe) =>
       assert(!scansJson(qe), s"$name: ${qe.executedPlan}")
@@ -191,7 +193,7 @@ class IngestSpec extends SparkSuite {
     val line = Ingest.leagueConfigJson(lm).as[String].head()
     assert(line === """{"code":"xx","league":"Liga \"Especial\" \\ 2020"}""")
     // and it parses back to the same value
-    val back = spark.read.json(Seq(line).toDS).select($"league").as[String].head()
+    val back = spark.read.json(Seq(line).toDS()).select($"league").as[String].head()
     assert(back === """Liga "Especial" \ 2020""")
   }
 

@@ -1,7 +1,6 @@
 package graft.soccer
 
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
 
