@@ -79,36 +79,40 @@ case class RollingMd5Min(child: Expression, k: Int)
     copy(child = newChild)
 }
 
-/** ALL rolling-md5 grams of a text as array<struct<pos: long,
-  * h: string>> in one compiled pass (round-13, VERDICT r12 task 5 —
-  * q265's winnowing BUILD path): bit-identical, for texts of >= k
-  * chars, to the interpreted HOF
-  * `transform(sequence(1, n_grams), p -> named_struct('pos',
-  * CAST(p AS BIGINT), 'h', md5(substr(text, p, k))))` with
-  * n_grams = numChars - k + 1 (pinned in TextAnalysisSpec, incl.
-  * multi-byte UTF-8) — 1-based char positions, each gram hashed over
-  * its UTF-8 byte span in place with one reused MessageDigest instead
-  * of an interpreted lambda dispatch + substr copy + md5-expression
-  * round trip per gram. Texts shorter than k return an EMPTY array
-  * (call sites filter length >= k before the kernel; the HOF's
-  * sequence(1, n<=0) would error/degenerate there, so the contract is
-  * pinned only for length >= k). NULL for NULL input. */
-case class RollingMd5Grams(child: Expression, k: Int)
+/** A text's winnowing postings (q265's index build) in one compiled
+  * pass: array<struct<sh: string, n_pos: long>>, one entry per distinct
+  * selected md5 hex digest with the number of selected positions that
+  * carry it, sorted by `sh`. Selection is the Schleimer et al. rule over
+  * the text's `k`-char grams (each hashed over its UTF-8 byte span in
+  * place, as [[RollingMd5Min]] does): in every full window of `w`
+  * consecutive grams, the minimum digest, the rightmost on ties; a
+  * position selected by several windows counts once. Equal, per text, to
+  * the windowed `min_by` formulation over the `transform(sequence(...),
+  * p -> md5(substr(text, p, k)))` grams followed by a distinct and a
+  * per-hash count (pinned in TextAnalysisSpec, incl. multi-byte UTF-8).
+  *
+  * Why: that formulation needs a doc-scale exchange, a sort, a window,
+  * a distinct and an aggregate, and carries a struct with a 32-char hex
+  * string per gram between them. Here a text holds 16 bytes per gram
+  * (raw digests in one buffer) and only the distinct selected digests
+  * are hex-encoded. Empty array when the text has no full window
+  * (fewer than k + w - 1 chars); NULL for NULL input. */
+case class WinnowPostings(child: Expression, k: Int, w: Int)
     extends UnaryExpression with ExpectsInputTypes {
-  require(k >= 1, s"gram size must be >= 1, got $k")
+  require(k >= 1 && w >= 1, s"k=$k and w=$w must both be >= 1")
 
   override def inputTypes = Seq(StringType)
   override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("pos", LongType, nullable = false),
-    StructField("h", StringType, nullable = false))), containsNull = false)
-  override def prettyName: String = "graft_rolling_md5_grams"
+    StructField("sh", StringType, nullable = false),
+    StructField("n_pos", LongType, nullable = false))), containsNull = false)
+  override def prettyName: String = "graft_winnow_postings"
 
   override def nullSafeEval(s: Any): Any =
-    RollingHashKernel.md5Grams(s.asInstanceOf[UTF8String], k)
+    RollingHashKernel.winnowPostings(s.asInstanceOf[UTF8String], k, w)
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, t =>
-      s"${ev.value} = graft.functions.RollingHashKernel.md5Grams($t, $k);")
+      s"${ev.value} = graft.functions.RollingHashKernel.winnowPostings($t, $k, $w);")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -392,20 +396,25 @@ object RollingHashKernel {
     * kernel outputs equal their Column-function formulations. */
   private val Seed = 42L
 
-  def minGram(t: UTF8String, k: Int): Long = {
-    val nBytes = t.numBytes()
-    val bytes = t.getBytes // may copy if unaligned; one copy per row max
-    // charOffs(i) = byte offset where char i starts; charOffs(n) = end
-    val nChars = t.numChars()
+  /** charOffs(i) = byte offset where char i of `bytes` starts;
+    * charOffs(nChars) = the end. */
+  private def charOffsets(bytes: Array[Byte], nChars: Int): Array[Int] = {
     val charOffs = new Array[Int](nChars + 1)
     var b = 0
     var c = 0
-    while (b < nBytes) {
+    while (b < bytes.length) {
       charOffs(c) = b
       b += UTF8String.numBytesForFirstByte(bytes(b))
       c += 1
     }
-    charOffs(nChars) = nBytes
+    charOffs(nChars) = bytes.length
+    charOffs
+  }
+
+  def minGram(t: UTF8String, k: Int): Long = {
+    val bytes = t.getBytes // may copy if unaligned; one copy per row max
+    val nChars = t.numChars()
+    val charOffs = charOffsets(bytes, nChars)
     val windows = math.max(nChars - (k - 1), 1)
     var min = Long.MaxValue
     var i = 0
@@ -457,19 +466,23 @@ object RollingHashKernel {
   }
   private val HexBytes = "0123456789abcdef".getBytes
 
+  /** Lower-case hex of the 16-byte digest at `digests(off)`: the text
+    * Spark's md5() returns for the same bytes. */
+  private def md5Hex(digests: Array[Byte], off: Int): UTF8String = {
+    val hex = new Array[Byte](32)
+    var j = 0
+    while (j < 16) {
+      hex(2 * j) = HexBytes((digests(off + j) >> 4) & 0xf)
+      hex(2 * j + 1) = HexBytes(digests(off + j) & 0xf)
+      j += 1
+    }
+    UTF8String.fromBytes(hex)
+  }
+
   def minMd5Gram(t: UTF8String, k: Int): UTF8String = {
-    val nBytes = t.numBytes()
     val bytes = t.getBytes
     val nChars = t.numChars()
-    val charOffs = new Array[Int](nChars + 1)
-    var b = 0
-    var c = 0
-    while (b < nBytes) {
-      charOffs(c) = b
-      b += UTF8String.numBytesForFirstByte(bytes(b))
-      c += 1
-    }
-    charOffs(nChars) = nBytes
+    val charOffs = charOffsets(bytes, nChars)
     val windows = math.max(nChars - (k - 1), 1)
     val md = md5Local.get()
     // two 16-byte buffers: digest into `cur`, keep the minimum in `best`
@@ -497,58 +510,67 @@ object RollingHashKernel {
       }
       i += 1
     }
-    val hex = new Array[Byte](32)
-    var j = 0
-    while (j < 16) {
-      hex(2 * j) = HexBytes((best(j) >> 4) & 0xf)
-      hex(2 * j + 1) = HexBytes(best(j) & 0xf)
-      j += 1
-    }
-    UTF8String.fromBytes(hex)
+    md5Hex(best, 0)
   }
 
-  /** All k-char-gram md5 digests of `t` as (pos, hex) structs — the
-    * [[RollingMd5Grams]] kernel. Same char-window/byte-span discipline
-    * as [[minMd5Gram]]; every digest is hex-encoded (the consumer keys
-    * on the hex text), the saving is the per-gram lambda dispatch and
-    * substr copy. Empty array when numChars < k. */
-  def md5Grams(t: UTF8String, k: Int): ArrayData = {
-    val nBytes = t.numBytes()
+  /** The [[WinnowPostings]] kernel. Digests of all n = numChars - k + 1
+    * grams go into one `byte[n * 16]` buffer, compared as unsigned bytes
+    * (the order of their hex text). The window scan keeps the current
+    * pick while it stays inside the window, so each window costs one
+    * compare; picks never move left, so a repeated pick is the previous
+    * one and is dropped there. The picks are then sorted by digest and
+    * counted in runs. */
+  def winnowPostings(t: UTF8String, k: Int, w: Int): ArrayData = {
     val bytes = t.getBytes
     val nChars = t.numChars()
-    if (nChars < k) return new GenericArrayData(Array.empty[Any])
-    val charOffs = new Array[Int](nChars + 1)
-    var b = 0
-    var c = 0
-    while (b < nBytes) {
-      charOffs(c) = b
-      b += UTF8String.numBytesForFirstByte(bytes(b))
-      c += 1
-    }
-    charOffs(nChars) = nBytes
-    val windows = nChars - k + 1
+    val n = nChars - k + 1
+    if (n < w) return new GenericArrayData(Array.empty[Any])
+    val charOffs = charOffsets(bytes, nChars)
     val md = md5Local.get()
-    val digest = new Array[Byte](16)
-    val out = new Array[Any](windows)
+    val digests = new Array[Byte](n * 16)
     var i = 0
-    while (i < windows) {
-      val start = charOffs(i)
-      val end = charOffs(i + k)
+    while (i < n) {
       md.reset()
-      md.update(bytes, start, end - start)
-      md.digest(digest, 0, 16)
-      val hex = new Array[Byte](32)
-      var j = 0
-      while (j < 16) {
-        hex(2 * j) = HexBytes((digest(j) >> 4) & 0xf)
-        hex(2 * j + 1) = HexBytes(digest(j) & 0xf)
-        j += 1
-      }
-      out(i) = new GenericInternalRow(
-        Array[Any]((i + 1).toLong, UTF8String.fromBytes(hex)))
+      md.update(bytes, charOffs(i), charOffs(i + k) - charOffs(i))
+      md.digest(digests, i * 16, 16)
       i += 1
     }
-    new GenericArrayData(out)
+    def cmp(a: Int, b: Int): Int = java.util.Arrays.compareUnsigned(
+      digests, a * 16, a * 16 + 16, digests, b * 16, b * 16 + 16)
+    val picks = new Array[Integer](n - w + 1)
+    var nPicks = 0
+    var pick = -1
+    i = 0
+    while (i <= n - w) {
+      val last = i + w - 1
+      if (pick < i) { // the last pick left the window: scan all of it
+        pick = i
+        var j = i + 1
+        while (j <= last) { if (cmp(j, pick) <= 0) pick = j; j += 1 }
+      } else if (cmp(last, pick) <= 0) pick = last
+      if (nPicks == 0 || picks(nPicks - 1).intValue != pick) {
+        picks(nPicks) = pick
+        nPicks += 1
+      }
+      i += 1
+    }
+    java.util.Arrays.sort(picks, 0, nPicks,
+      (a: Integer, b: Integer) => cmp(a, b))
+    val out = new Array[Any](nPicks)
+    var nOut = 0
+    var run = 0
+    i = 0
+    while (i < nPicks) {
+      run += 1
+      if (i == nPicks - 1 || cmp(picks(i), picks(i + 1)) != 0) {
+        out(nOut) = new GenericInternalRow(
+          Array[Any](md5Hex(digests, picks(i) * 16), run.toLong))
+        nOut += 1
+        run = 0
+      }
+      i += 1
+    }
+    new GenericArrayData(out.take(nOut))
   }
 
   /** Adjacent bigram pairs with `<unk>` folding — the [[BigramUnkPairs]]

@@ -64,14 +64,14 @@ object TextFunctions {
     org.apache.spark.sql.GraftSqlShim.column(
       RollingMd5Min(org.apache.spark.sql.GraftSqlShim.expression(text), k))
 
-  /** All k-char-gram md5 digests as array<struct<pos, h>> in one
-    * compiled pass ([[graft.functions.RollingMd5Grams]]; bit-identical
-    * to the `transform(sequence(...), p -> named_struct('pos', p, 'h',
-    * md5(substr(text, p, k))))` HOF form for texts >= k chars, pinned
-    * in TextAnalysisSpec). */
-  def rollingMd5Grams(text: Column, k: Int): Column =
+  /** A text's winnowing postings over its k-char md5 grams and windows
+    * of w as array<struct<sh, n_pos>> sorted by sh, in one compiled pass
+    * ([[graft.functions.WinnowPostings]]; equal to the window
+    * formulation's selection, distinct and count, pinned in
+    * TextAnalysisSpec). */
+  def winnowPostings(text: Column, k: Int, w: Int): Column =
     org.apache.spark.sql.GraftSqlShim.column(
-      RollingMd5Grams(org.apache.spark.sql.GraftSqlShim.expression(text), k))
+      WinnowPostings(org.apache.spark.sql.GraftSqlShim.expression(text), k, w))
 
   /** Adjacent-token bigrams with `<unk>` vocabulary folding as
     * array<struct<w1, w2>> in one compiled pass

@@ -400,95 +400,47 @@ object TextAnalysis {
     * fingerprint values, and values selected in ≥ 2 docs (the
     * cross-doc collision mass near-dup detection would verify).
     *
-    * Engine/oracle split: the ENGINE is single-pass — one windowed
-    * `min_by((pos, h), (h, −pos))` over a rows-frame of w positions
-    * (no window explosion); the ORACLE expands every (window,
-    * member) pair and ranks per window — different machinery, same
-    * selection, so the hash compare certifies the min_by frame
-    * semantics themselves.
+    * Engine/oracle split: the ENGINE selects inside one compiled
+    * per-document kernel ([[graft.functions.WinnowPostings]]: raw
+    * digests, a one-compare-per-window rightmost-min scan, picks sorted
+    * and counted per hash); the ORACLE expands every (window, member)
+    * pair and ranks per window — different machinery, same selection,
+    * so the hash compare certifies the kernel's window semantics. A
+    * third formulation, the windowed `min_by` over the md5 HOF grams,
+    * is TextAnalysisSpec's reference for the postings themselves.
     *
-    * Scale shape: the selection's one exchange is DOC-scale (see
-    * [[winnowSelect]] — repartition before the explode; the
-    * char-scale window, filter and distinct are partition-local, so
-    * gram rows never cross the network); the landed selection is
-    * folded into a persisted `_SUCCESS`-guarded posting index
-    * ([[winnowIndex]], the q104 gram-index convention — a corpus
-    * fingerprint sketch is the canonical build-once artifact), and the
-    * report ([[winnowReport]]) is one scan of it and a (source, hash)
-    * rollup, then a source rollup, both map-side combined. The ×w
-    * window expansion exists ONLY in the oracle, run at oracle SF.
-    * Measured at sf0.1: 16 s (naive two-consumer recompute) → 6 s
-    * (one build) → 1.7 s serve as two rollups over the raw selection
-    * (NOTES); reading the posting index once then cut one execution
-    * from 9 Spark jobs to 5 (sf0.001, PlanInvariantsSpec). */
-  /** The winnowing selection itself over a (doc_id, source, text)
-    * frame — package-visible so Round9Spec can pin the coverage and
-    * shared-substring guarantees on crafted fixtures. Returns one row
-    * per distinct selected (doc, position): (doc_id, source, n_grams,
-    * spos, sh).
-    *
-    * Shape (round-9, measured at sf0.1 — numbers in NOTES): the ONLY
-    * exchange is a DOC-scale repartition BEFORE the gram explode —
-    * explode preserves partitioning, so the char-scale window (the
-    * codegen'd rightmost-min `min_by` over a w-row frame), the
-    * full-window filter AND the selected-position distinct all run
-    * partition-local (their required clusterings are subsets of
-    * hash(doc_id)); gram rows never cross the network. The
-    * alternative in-expression formulation (lambda-bound hs array +
-    * array_min per window) shuffles nothing at all but pays
-    * interpreted-HOF dispatch per (window × member): measured 20 s vs
-    * 6 s for this shape — codegen'd window beats interpreted HOF at
-    * equal scan cost, the reverse of the q213 bounded-frame cases. */
-  private[graft] def winnowSelect(docs: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = WinnowW
-    val minLen = WinnowK + WinnowW - 1
-    val d = docs
-      .filter(col("text").isNotNull && length(col("text")) >= minLen)
+    * Scale shape: the build ([[winnowPostings]]) is one narrow stage —
+    * scan, filter, kernel, posexplode, write — with no exchange, so no
+    * text or gram row crosses the network; a task holds 16 bytes per
+    * gram of the document it is on. The postings land in a persisted
+    * `_SUCCESS`-guarded index ([[winnowIndex]], the q104 gram-index
+    * convention — a corpus fingerprint sketch is the canonical
+    * build-once artifact), and the report ([[winnowReport]]) is one
+    * scan of it and a (source, hash) rollup, then a source rollup,
+    * both map-side combined. The ×w window expansion exists ONLY in
+    * the oracle, run at oracle SF. Cold build in a fresh JVM at sf0.01
+    * on 4 vCPUs: 5.1-5.6 s for the window formulation, whose
+    * post-exchange stage AQE coalesced into one task, and 2.1-2.9 s for
+    * the kernel (NOTES "q265 build"). */
+  /** The winnowing posting index over a (doc_id, source, text) frame:
+    * one row per distinct (doc, selected hash) with `n_grams`, `n_pos`,
+    * the number of selected positions carrying that hash, and
+    * `doc_head`, true on exactly one posting per doc (its smallest
+    * hash). Input contract: one row per `doc_id`, the key of the
+    * documents table — the kernel sees one text per row, so two rows of
+    * one doc_id would post twice. The whole build is one row-wise
+    * kernel call and a posexplode: no exchange, sort, window or
+    * aggregate. */
+  private[graft] def winnowPostings(docs: DataFrame): DataFrame =
+    docs
+      .filter(length(col("text")) >= WinnowK + WinnowW - 1)
       .select(col("doc_id"), col("source"),
         (length(col("text")) - (WinnowK - 1)).cast("long").as("n_grams"),
-        col("text"))
-      .repartition(col("doc_id")) // the one (doc-scale) exchange
-    // round-13: the gram stream was an interpreted `transform` lambda —
-    // one dispatch + substr copy + md5-expression round trip PER CHAR
-    // POSITION (~1M grams per build at sf0.1; the build measured ~6 s).
-    // graft.functions.RollingMd5Grams computes the identical
-    // (pos, hex-md5) structs in one compiled pass per row (bit-identity
-    // pinned in TextAnalysisSpec); the min_by window, full-window filter
-    // and distinct downstream are unchanged.
-    val grams = d.select(col("doc_id"), col("source"), col("n_grams"),
-        explode(graft.functions.TextFunctions.rollingMd5Grams(
-          col("text"), WinnowK)).as("g"))
+        posexplode(graft.functions.TextFunctions.winnowPostings(
+          col("text"), WinnowK, WinnowW)))
       .select(col("doc_id"), col("source"), col("n_grams"),
-        col("g.pos").as("pos"), col("g.h").as("h"))
-    val win = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-      .rowsBetween(Window.currentRow, w - 1)
-    grams
-      .withColumn("selw",
-        min_by(struct(col("pos"), col("h")), struct(col("h"), -col("pos")))
-          .over(win))
-      .filter(col("pos") <= col("n_grams") - (w - 1)) // full windows only
-      .select(col("doc_id"), col("source"), col("n_grams"),
-        col("selw.pos").as("spos"), col("selw.h").as("sh"))
-      .distinct() // partition-local: clustering ⊇ hash(doc_id)
-  }
-
-  /** The winnowing posting index over [[winnowSelect]]: one row per
-    * distinct (doc, selected hash) with `n_pos`, the number of selected
-    * positions carrying that hash, and `doc_head`, true on exactly one
-    * posting per doc. Both steps key on doc_id, which the selection's
-    * one doc-scale exchange already clusters by, so they add no
-    * exchange. Folding the per-doc dedup into the build, where the doc
-    * clustering already exists, is what lets [[winnowReport]] read the
-    * index once. */
-  private[graft] def winnowPostings(docs: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    winnowSelect(docs)
-      .groupBy(col("doc_id"), col("source"), col("n_grams"), col("sh"))
-      .agg(count(lit(1)).as("n_pos"))
-      .withColumn("doc_head", row_number().over(
-        Window.partitionBy(col("doc_id")).orderBy(col("sh"))) === 1)
-  }
+        col("col.sh").as("sh"), col("col.n_pos").as("n_pos"),
+        (col("pos") === 0).as("doc_head"))
 
   /** The persisted winnowing posting index behind q265 — the
     * q104-gram-index convention: a corpus fingerprint sketch is the

@@ -85,10 +85,11 @@ class Round9Spec extends SparkSuite {
   test("q265 winnowing: coverage gap <= w, guarantee catches a shared 11-char substring") {
     import spark.implicits._
     import graft.operators.TextAnalysis
+    import TextAnalysisSpec.{winnowFixture, winnowSelectRef}
     // coverage: every window of w consecutive gram positions contains a
     // selection, so consecutive selected positions differ by <= w
     val docs = Tables.documents(spark, Sf0001).limit(200)
-    val sel = TextAnalysis.winnowSelect(docs)
+    val sel = winnowSelectRef(docs)
       .select($"doc_id", $"spos").as[(Long, Long)].collect()
       .groupBy(_._1).view.mapValues(_.map(_._2).sorted).toMap
     assert(sel.nonEmpty)
@@ -97,19 +98,15 @@ class Round9Spec extends SparkSuite {
         assert(b - a <= TextAnalysis.WinnowW, s"doc $doc coverage gap $a -> $b")
       }
     }
-    // guarantee: two docs sharing ONE substring of length w + k - 1
-    // (= 11) at different offsets, different elsewhere, MUST share a
-    // fingerprint hash (Schleimer et al. theorem 1); the shared window
-    // of k-grams forces a common selection
-    val shared = "QWERTYUIOPA" // 11 chars, alphabet disjoint from fillers
-    val fixture = Seq(
-      (1L, "s", "aaaaaaaaaaaaaaaa" + shared + "bbbbbbbbbbbbbbbb"),
-      (2L, "s", "cccccccccc" + shared + "dddddddddddddddddddddd"))
-      .toDF("doc_id", "source", "text")
-    val fsel = TextAnalysis.winnowSelect(fixture)
+    // guarantee, on the engine's postings: two docs sharing ONE
+    // substring of length w + k - 1 (= 11) at different offsets,
+    // different elsewhere, MUST share a fingerprint hash (Schleimer et
+    // al. theorem 1); the shared window of k-grams forces a common
+    // selection
+    val post = TextAnalysis.winnowPostings(winnowFixture(spark).filter($"doc_id" <= 2L))
       .select($"doc_id", $"sh").as[(Long, String)].collect()
-    val h1 = fsel.filter(_._1 == 1L).map(_._2).toSet
-    val h2 = fsel.filter(_._1 == 2L).map(_._2).toSet
+    val h1 = post.filter(_._1 == 1L).map(_._2).toSet
+    val h2 = post.filter(_._1 == 2L).map(_._2).toSet
     assert(h1.intersect(h2).nonEmpty,
       "winnowing guarantee violated: shared 11-char substring produced no shared fingerprint")
   }

@@ -1,11 +1,12 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.TextAnalysis
 
 /** Text-analysis operators (X4, SURVEY §2.11). */
 class TextAnalysisSpec extends SparkSuite {
+  import TextAnalysisSpec._
 
   test("q62 stratified sample: rates tracked per stratum, rerun-stable") {
     val s = TextAnalysis.stratifiedSample(spark, Sf0001).cache()
@@ -194,24 +195,6 @@ class TextAnalysisSpec extends SparkSuite {
     assert(both.filter(not(col("kernel") <=> col("hof"))).count() === 0)
   }
 
-  test("RollingMd5Grams kernel is bit-equal to the transform md5-HOF form") {
-    import spark.implicits._
-    // the q265 build-path contract: same corpus-plus-edges fixture class
-    // as the RollingMd5Min pin — exact k-length, repeats, multi-byte
-    // UTF-8 (char windows hash the chars' byte spans, not raw bytes)
-    val docs = (Seq("abcdefgh", "abcdefghi", "aaaaaaaaaa", "zzzzzzzz",
-      "héllo wörld ünïcode", "ascii and then émoji 😀 tail pad") ++
-      Tables.documents(spark, Sf0001).select("text")
-        .na.drop().as[String].collect().toSeq)
-      .filter(_.length >= 8).toDF("text")
-    val both = docs.select(
-      graft.functions.TextFunctions.rollingMd5Grams(col("text"), 8).as("kernel"),
-      expr("transform(sequence(1, length(text) - 7), " +
-        "p -> named_struct('pos', cast(p as bigint), " +
-        "'h', md5(substr(text, p, 8))))").as("hof"))
-    assert(both.filter(not(col("kernel") <=> col("hof"))).count() === 0)
-  }
-
   test("BigramUnkPairs kernel equals the zip_with-slices HOF form") {
     import spark.implicits._
     val vocab = Seq("the", "a", "dog", "cat", "ran")
@@ -384,6 +367,50 @@ class TextAnalysisSpec extends SparkSuite {
     got.foreach { case (_, _, ctx) => assert(ctx.split(" ").contains(term)) }
   }
 
+  test("q265 WinnowPostings kernel equals the window-formulation reference postings") {
+    import spark.implicits._
+    // edges: texts of exactly k (no full window) and k + w - 1 chars
+    // (one window), runs, multi-byte UTF-8 and emoji (grams are char
+    // windows hashed over their byte spans), a NULL text, then sf0.001
+    val edges = Seq("abcdefgh", "abcdefghi", "abcdefghijk", "abcdefghijkl",
+      "aaaaaaaaaa", "aaaaaaaaaaaaaaa", "zzzzzzzz", "héllo wörld ünïcode",
+      "ascii and then émoji 😀 tail pad", "😀😀😀😀😀😀😀😀😀😀😀😀",
+      "ababababababababab", null)
+      .zipWithIndex.map { case (t, i) => (100L + i, "e", t) }
+      .toDF("doc_id", "source", "text")
+    val cols = Seq("doc_id", "source", "n_grams", "sh", "n_pos", "doc_head")
+    Seq("fixture" -> winnowFixture(spark).union(edges),
+        "sf0.001" -> Tables.documents(spark, Sf0001)).foreach {
+      case (what, docs) =>
+        val got = TextAnalysis.winnowPostings(docs).select(cols.map(col): _*)
+        val want = winnowPostingsRef(docs).select(cols.map(col): _*)
+        assert(got.schema.map(f => (f.name, f.dataType)) ===
+          want.schema.map(f => (f.name, f.dataType)), what)
+        val g = got.collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq
+        val r = want.collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq
+        assert(g.nonEmpty, what)
+        assert(g === r, what)
+    }
+  }
+
+  test("q265 index build is one narrow stage: one Spark job, no exchange, sort, window or aggregate") {
+    import org.apache.spark.sql.execution.SortExec
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.window.WindowExec
+    val out = java.nio.file.Files.createTempDirectory("graft_winnow_build").toString
+    try {
+      val build = TextAnalysis.winnowPostings(Tables.documents(spark, Sf0001))
+      val jobs = jobsStarted(build.write.mode("overwrite").parquet(out))
+      assert(jobs === 1)
+      val heavy = planNodes(build.queryExecution.executedPlan).collect {
+        case n @ (_: Exchange | _: SortExec | _: WindowExec | _: BaseAggregateExec) =>
+          n.nodeName
+      }
+      assert(heavy.isEmpty, heavy)
+    } finally Scratch.deleteNow(out)
+  }
+
   /** The q265 report as two rollups straight over the winnowing
     * selection: per-doc then per-source totals, and distinct
     * (source, hash, doc) then per-source fingerprint totals, joined. */
@@ -408,23 +435,10 @@ class TextAnalysisSpec extends SparkSuite {
   }
 
   test("q265 posting-index report equals the two-rollup report over the selection") {
-    import spark.implicits._
-    // Round9Spec's shared-substring pair, plus docs whose selections
-    // repeat a hash (runs of one char), a doc too short to hold one
-    // full window, and a second source sharing a substring
-    val shared = "QWERTYUIOPA"
-    val fixture = Seq(
-      (1L, "s", "aaaaaaaaaaaaaaaa" + shared + "bbbbbbbbbbbbbbbb"),
-      (2L, "s", "cccccccccc" + shared + "dddddddddddddddddddddd"),
-      (3L, "s", "a" * 40),
-      (4L, "t", "zzzzzzzzzzzzzzzzzzzz" + shared + "zzzzzzzzzzzzzzzzzzzz"),
-      (5L, "t", "short"),
-      (6L, "t", "xyxyxyxyxyxyxyxyxyxyxyxyxyxy"))
-      .toDF("doc_id", "source", "text")
-    Seq("fixture" -> fixture, "sf0.001" -> Tables.documents(spark, Sf0001)).foreach {
+    Seq("fixture" -> winnowFixture(spark), "sf0.001" -> Tables.documents(spark, Sf0001)).foreach {
       case (what, docs) =>
         val got = TextAnalysis.winnowReport(TextAnalysis.winnowPostings(docs))
-        val want = winnowReportFromSelection(TextAnalysis.winnowSelect(docs))
+        val want = winnowReportFromSelection(winnowSelectRef(docs))
         assert(got.schema === want.schema, what)
         assert(got.collect().toSeq === want.collect().toSeq, what)
     }
@@ -440,5 +454,67 @@ class TextAnalysisSpec extends SparkSuite {
     assert(scans.head.relation.location.rootPaths.map(_.getName) ===
       Seq(new org.apache.hadoop.fs.Path(Scratch.artifactPath("winnow_post", Sf0001,
         s"_k${TextAnalysis.WinnowK}w${TextAnalysis.WinnowW}")).getName))
+  }
+}
+
+/** Reference winnowing formulations and fixtures for q265, shared by
+  * [[TextAnalysisSpec]] and [[Round9Spec]]. */
+object TextAnalysisSpec {
+
+  /** The reference winnowing selection over a (doc_id, source, text)
+    * frame, in the window formulation: md5 grams from the SQL HOF, a
+    * rightmost-min `min_by` over a rows-frame of w grams, full windows
+    * only, and a distinct over the selected (doc, position). One row per
+    * selection: (doc_id, source, n_grams, spos, sh). Shares no code with
+    * the [[graft.functions.WinnowPostings]] kernel. */
+  def winnowSelectRef(docs: DataFrame): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val k = TextAnalysis.WinnowK; val w = TextAnalysis.WinnowW
+    val grams = docs
+      .filter(length(col("text")) >= k + w - 1)
+      .select(col("doc_id"), col("source"),
+        (length(col("text")) - (k - 1)).cast("long").as("n_grams"),
+        explode(expr(s"transform(sequence(1, length(text) - ${k - 1}), " +
+          s"p -> named_struct('pos', cast(p as bigint), " +
+          s"'h', md5(substr(text, p, $k))))")).as("g"))
+      .select(col("doc_id"), col("source"), col("n_grams"),
+        col("g.pos").as("pos"), col("g.h").as("h"))
+    val win = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
+      .rowsBetween(Window.currentRow, w - 1)
+    grams
+      .withColumn("selw",
+        min_by(struct(col("pos"), col("h")), struct(col("h"), -col("pos")))
+          .over(win))
+      .filter(col("pos") <= col("n_grams") - (w - 1))
+      .select(col("doc_id"), col("source"), col("n_grams"),
+        col("selw.pos").as("spos"), col("selw.h").as("sh"))
+      .distinct()
+  }
+
+  /** The reference postings: [[winnowSelectRef]] counted per
+    * (doc, hash), `doc_head` on each doc's smallest hash. */
+  def winnowPostingsRef(docs: DataFrame): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    winnowSelectRef(docs)
+      .groupBy(col("doc_id"), col("source"), col("n_grams"), col("sh"))
+      .agg(count(lit(1)).as("n_pos"))
+      .withColumn("doc_head", row_number().over(
+        Window.partitionBy(col("doc_id")).orderBy(col("sh"))) === 1)
+  }
+
+  /** The shared-substring pair of the guarantee test, plus docs whose
+    * selections repeat a hash (runs of one char), a doc too short to
+    * hold one full window, and a second source sharing a substring. */
+  val winnowShared = "QWERTYUIOPA" // 11 chars = w + k - 1
+  def winnowFixture(spark: SparkSession): DataFrame = {
+    import spark.implicits._
+    Seq(
+      (1L, "s", "aaaaaaaaaaaaaaaa" + winnowShared + "bbbbbbbbbbbbbbbb"),
+      (2L, "s", "cccccccccc" + winnowShared + "dddddddddddddddddddddd"),
+      (3L, "s", "a" * 40),
+      (4L, "t", "zzzzzzzzzzzzzzzzzzzz" + winnowShared + "zzzzzzzzzzzzzzzzzzzz"),
+      (5L, "t", "short"),
+      (6L, "t", "xyxyxyxyxyxyxyxyxyxyxyxyxyxy"))
+      .toDF("doc_id", "source", "text")
   }
 }
