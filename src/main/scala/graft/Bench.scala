@@ -25,56 +25,23 @@ import org.apache.spark.sql.SparkSession
   * others on identical code — the q147/q241 class) is visible inside
   * one artifact without a cross-round diff. Reps are INTERLEAVED — the whole suite runs
   * `reps` full passes, each pass visiting the queries in a fresh
-  * seeded-shuffled order — never back-to-back per query. Rationale
-  * (round-2/3 lesson): this container has multi-minute drift windows
-  * where everything runs 2-7x slower on identical code/plans. With
-  * back-to-back reps in a FIXED order, one query's entire sample lives
-  * in one time-neighborhood — round 3's artifact showed the
-  * alphabetically-last query at 6.9x on unchanged code because a drift
-  * window covered all of its reps. Interleaved shuffled passes spread
-  * any drift window thinly across many queries, so a per-query median
-  * reflects the plan, not the schedule position. SPARK_GRAFT_BENCH_SEED
-  * (default 421) makes the orders reproducible.
+  * seeded-shuffled order — never back-to-back per query, so a drift
+  * window spreads thinly across many queries instead of covering one
+  * query's whole sample. SPARK_GRAFT_BENCH_SEED (default 421) makes the
+  * orders reproducible.
   *
-  * Drift calibration (round-5): interleaving fixes WITHIN-run
-  * concentration but cannot normalize a whole-run-slow container —
-  * BENCH_r04 ran 2-8x slower than r3 on unchanged code/plans because
-  * the entire driver window was slow. Each pass therefore also times a
-  * FIXED probe (the warm-up's scan/agg/noop-write shape, constant
-  * across rounds), shuffled into the pass like any query. The metric
-  * line carries `calibration` (median probe seconds) and
-  * `calibration_passes`; cross-round comparisons should divide totals
-  * by the calibration ratio before calling anything a regression.
-  * Output layout is truncation-aware: the driver artifact keeps only a
-  * TAIL of stdout (BENCH_r04's map lost q1-q47), so a compact summary
-  * object ({"metric":"summary",...}) prints on its own line before the
-  * full metric line AND the headline fields (total/worst/calibration)
-  * repeat AFTER the per-query map inside the metric line — whichever
-  * end survives truncation, the headline numbers survive with it.
-  *
-  * Drift auto-adjudication (round-9): a per-query max/median > 3
-  * inside one run is the q147/q91 spike class; the flagged set is
-  * automatically re-measured with 5 extra interleaved passes and the
-  * artifact carries `drift_flags` + `drift_remeasure` — the manual
-  * REPS=5 adjudication protocol, automated. The worst-5 list also
-  * emits probe-normalized (`worst_cal_units`) so cross-round worst
-  * lists compare directly.
+  * Each pass also times FIXED calibration probes (`calibration*`), so
+  * a whole-run-slow host is told apart from a code regression. Output
+  * is truncation-aware: gate fields lead the summary line and close
+  * the metric line. A per-query max/median > 3 is re-measured with 5
+  * more interleaved passes (`drift_flags`, `drift_remeasure`). The
+  * history behind each rule is in NOTES.md "Bench: design history".
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // Session settings live in graft.Session. Round-13 measured
-    // NON-change to them: AQE size-based partition coalescing
-    // (coalescePartitions.parallelismFirst=false) was tried for the
-    // r12 "32-core over-parallelization" list and made
-    // the suite WORSE across the board (min-of-reps +7-58% on a
-    // 12-query class-spanning set; q30 +33%, q8 +58%) — this suite's
-    // post-shuffle work is CPU-dense per shuffled byte (quadratic
-    // verifies, window chains), so coalescing tiny-byte stages to one
-    // partition serializes real compute. parallelismFirst=true (the
-    // default) is the right setting here at every scale; the r12
-    // scaling-block 0.08-0.4 ratios were median contamination by
-    // drift/build reps, not a plan defect (OPTIMIZATION_r13.md).
+    // Session settings live in graft.Session; size-based AQE coalescing
+    // (parallelismFirst=false) was measured worse (NOTES.md, Bench)
     val spark = Session.local()
     // warm-up: JIT the scan/agg/write paths once, untimed
     spark.read.parquet(s"$sfDir/lineitem.parquet")
@@ -141,25 +108,18 @@ object Bench {
     // Fixed calibration probe: the warm-up's scan/agg shape, constant
     // across rounds and independent of any registered query, timed once
     // per pass at a seeded-shuffled position like any other query. Its
-    // cross-round ratio IS the container-speed ratio (the plan never
-    // changes), so r4-style whole-run drift stops masquerading as code
-    // regression. Excluded from `total`.
+    // cross-run ratio IS the host-speed ratio (the plan never changes),
+    // so whole-run drift stops masquerading as code regression.
+    // Excluded from `total`.
     val calibrationName = "__calibration_probe"
     val probe: (SparkSession, String) => org.apache.spark.sql.DataFrame =
       (s, dir) => s.read.parquet(s"$dir/lineitem.parquet")
         .groupBy("l_returnflag", "l_linestatus")
         .agg(org.apache.spark.sql.functions.sum("l_quantity").as("q"),
           org.apache.spark.sql.functions.count("*").as("n"))
-    // Probe battery (round-11): the scan/agg probe's OWN reading moves
-    // ±20% across sessions in ways the query medians don't follow (an
-    // IO-bound shape — page-cache state dominates it), which caps the
-    // precision of any single-probe cal-unit comparison; two round-11
-    // same-code runs had raw per-query medians within 4% while their
-    // probes disagreed 7%. Two more fixed shapes probe the other
-    // resources — a high-cardinality shuffle and a pure-compute string
-    // kernel — so cross-round analysis can normalize against whichever
-    // resource actually drifted. `calibration` stays the scan probe for
-    // cross-round continuity; the battery medians ride alongside.
+    // Probe battery: a high-cardinality shuffle and a pure-compute
+    // string kernel beside the scan probe, so analysis can normalize by
+    // whichever resource drifted; `calibration` stays the scan probe
     val shuffleProbeName = "__calibration_shuffle"
     val shuffleProbe: (SparkSession, String) => org.apache.spark.sql.DataFrame =
       (s, dir) => s.read.parquet(s"$dir/lineitem.parquet")
@@ -215,30 +175,10 @@ object Bench {
     }
     val calShuffle = probeMedian(shuffleProbeName)
     val calCompute = probeMedian(computeProbeName)
-    // Drift auto-adjudication (round-9, VERDICT r8 task 3): a single
-    // rep far above its siblings on identical code is the q147/q91
-    // drift class (GC/page-cache spike) — previously adjudicated by a
-    // human re-running REPS=5 by hand (NOTES "Round-8 outlier
-    // adjudication"). Automate exactly that protocol inside ONE
-    // artifact: flag max/median > 3, immediately re-measure the
-    // flagged set with 5 interleaved shuffled passes, and append the
-    // re-measured spreads to the JSON. The headline numbers stay the
-    // main-run medians (the re-measure is evidence, not a retake);
-    // a flag whose re-measured median is ~the main median is a real
-    // slow query, one that collapses is adjudicated drift.
-    //
-    // q228 spread exemption note (VERDICT r9 task 5, root-caused
-    // round 10): the recurring ~19 s max rep in past artifacts is NOT
-    // a q228-internal cold path — an isolated 15-rep run (max/median
-    // 1.84), a streaming-family 5-rep run (1.26) and two full-tree
-    // runs (1.76, 1.10) all stayed quiet in the same session, 26
-    // consecutive spike-free reps. The r9 artifact that showed 19.33 s
-    // also showed q16 (a pure string-function scan with no state
-    // stores) at 13× its median in the same pass — a whole-container
-    // stall window, exactly the class this re-measure block exists to
-    // adjudicate. No pre-warm or code change is warranted; a future
-    // q228 flag whose re-measured median collapses is drift by this
-    // standing evidence.
+    // Drift adjudication: flag max/median > 3 and re-measure the
+    // flagged set with 5 interleaved passes. The headline numbers stay
+    // the main-run medians: a flag whose re-measured median collapses
+    // is drift, one that holds is a real slow query.
     val driftFlagged = spreads.collect {
       case (name, (_, med, mx)) if med > 0 && mx / med > 3.0 => name
     }
@@ -262,10 +202,8 @@ object Bench {
     val total = results.map(_._2).sum
     val worst = results.sortBy(-_._2).take(5)
       .map { case (k, v) => s"\"" + k + "\":" + f"$v%.3f" }.mkString("{", ",", "}")
-    // worst-5 in CAL-UNITS (median / calibration probe): raw-second
-    // worst lists from different rounds ran on different-speed
-    // containers — the cal-unit list is the one that compares
-    // directly across rounds (VERDICT r8 task 3)
+    // worst-5 in CAL-UNITS (median / calibration probe): the list that
+    // compares across different-speed hosts
     val worstCal =
       if (calMedian <= 0) "{}"
       else results.sortBy(-_._2).take(5)
@@ -284,27 +222,13 @@ object Bench {
     // without manual adjudication. Pass/fail-neutral — emitted for the
     // reader, never gated on.
     val calUnits = if (calMedian > 0) total / calMedian else -1.0
-    // Contention-robust headlines (VERDICT r10 task 1): `total_cal_units`
-    // divides a cross-pass query-median sum by the cross-pass probe
-    // MEDIAN — a stall window that covers one whole pass inflates ~1/3
-    // of the per-query medians while the probe median can still come
-    // from a quiet pass, so three same-code r10 readings spanned 1.49×.
-    // Two forms that survive a one-pass stall:
-    //  * total_cal_units_robust — each pass's OWN query-time sum divided
-    //    by that pass's OWN probe (a whole-pass slowdown scales numerator
-    //    and denominator together), median across passes. Only queries
-    //    timed in EVERY pass contribute, so a failed rep cannot shrink
-    //    one pass's coverage relative to another's.
-    //  * total_min / total_cal_units_min — each query's fastest rep (its
-    //    least-contended measurement) summed; the cal-unit form divides
-    //    by the MEDIAN probe (dividing by the fastest probe mixed two
-    //    different windows and overstated whenever the probe's own min
-    //    was an outlier — the round-11 R1/R2 finding). Empirically the
-    //    RAW total_min is the most reproducible cross-session statistic
-    //    on same-class hardware (292.3 vs 290.5 s across two round-11
-    //    sessions whose probes disagreed by 7%): prefer it for
-    //    round-over-round trend reads; use cal-units only to adjudicate
-    //    gross (≥2×) container-speed changes.
+    // Headlines that survive a one-pass stall:
+    //  * total_cal_units_robust — each pass's own query-time sum over
+    //    that pass's own probe, median across passes; only queries timed
+    //    in every pass contribute.
+    //  * total_min / total_cal_units_min — each query's fastest rep
+    //    summed, the cal-unit form over the MEDIAN probe. Raw total_min
+    //    is the statistic to compare across runs.
     val completeNames = selected.map(_._1)
       .filter(n => passes.forall(_(n).isDefined))
     val perPassRatios = passes.flatMap { p =>
@@ -317,32 +241,17 @@ object Bench {
       else perPassRatios(perPassRatios.length / 2)
     val totalMin = spreads.map(_._2._1).sum
     val calUnitsMin = if (calMedian > 0) totalMin / calMedian else -1.0
-    // Gate numbers vs evidence payload (VERDICT r9 task 1): the driver
-    // keeps only a bounded HEAD and TAIL of the artifact, and the r9
-    // drift_remeasure block (44 entries on a noisy container) grew past
-    // the tail window, evicting total/total_cal_units from the captured
-    // text. Emit GATES LAST on the tail-facing metric line (after every
-    // unbounded payload) and GATES FIRST on the head-facing summary
-    // line, so both truncation directions retain them.
-    // total_min leads the gate block, adjacent to failed (VERDICT r11
-    // task 8): the round-11 probe-variance finding made the raw
-    // min-of-reps sum THE cross-round statistic (≤2.2% across three
-    // independent sessions while probe cal-units swung ±20%), so it must
-    // be the first gate field a truncated artifact retains, not the last.
+    // Gates go LAST on the tail-facing metric line (after every
+    // unbounded payload) and FIRST on the head-facing summary line, so
+    // a capture truncated either way keeps them; total_min leads them.
     val gates = f""""total_min":$totalMin%.3f,"failed":$failedJson,"n_queries":${results.size},"calibration":$calMedian%.4f,"calibration_shuffle":$calShuffle%.4f,"calibration_compute":$calCompute%.4f,"total":$total%.3f,"total_cal_units":$calUnits%.1f,"total_cal_units_robust":$calUnitsRobust%.1f,"total_cal_units_min":$calUnitsMin%.1f"""
     val payload = s""""worst":$worst,"worst_cal_units":$worstCal,"calibration_passes":$calPasses,"drift_flags":$driftFlagsJson,"drift_remeasure":$driftRemeasureJson"""
     // summary-first line: survives head-truncation of the artifact
     // (gates lead; the drift re-measure payload is metric-line-only)
     println(s"""{"metric":"summary",$gates,"reps":$reps,"sf":"$sfDir","drift_flags":$driftFlagsJson}""")
-    // per-query [min, median] as its OWN bounded line (round-13, VERDICT
-    // r12 task 2): BENCH_r11 kept only a tail of the metric line, whose
-    // unbounded drift payload pushed the per-query map out of the capture
-    // window — the cross-round PERF diff got n_common: 0 and no per-query
-    // baseline. This line is bounded (3-decimal, two numbers per query,
-    // no spread/drift payload, ~12 KB at 305 queries) and prints BEFORE
-    // the metric line, so a tail-truncation that eats the metric line's
-    // middle still leaves every query's timing in the artifact. Additive:
-    // the metric line below is unchanged (same fields, same statistics).
+    // per-query [min, median] as its OWN bounded line (~12 KB at 305
+    // queries) before the metric line, so a truncated capture keeps
+    // every query's timing
     val perQueryJson = spreads.map { case (k, (mn, md, _)) =>
       s"\"" + k + "\":[" + f"$mn%.3f,$md%.3f" + "]"
     }.mkString("{", ",", "}")

@@ -226,9 +226,8 @@ object Curation {
     * Scale shape: the running sum partitions by source, so packing
     * parallelizes across sources with no global order. A single
     * giant source would serialize its window into one task; the
-    * remedy at 100 TB is a two-pass distributed prefix sum
-    * (per-partition subtotals broadcast back as offsets), same
-    * result, which this operator's per-source contract makes a
+    * remedy at 100 TB is [[TwoPass.runningSum]] grouped by source,
+    * same result, which this operator's per-source contract makes a
     * drop-in replacement. Integer math throughout. */
   def sequencePacking(spark: SparkSession, dir: String): DataFrame = {
     val d = Tables.documents(spark, dir)
@@ -488,13 +487,7 @@ object Curation {
     *
     * The greedy rule needs a GLOBAL running sum in score order — the
     * single-window formulation is a one-task global sort at scale, so
-    * this runs the same DISTRIBUTED two-pass prefix sum as q91's
-    * rank: a sampled percentile sketch picks score-bucket boundaries
-    * (balance only, never correctness); per-bucket token subtotals
-    * come back as bounded driver-side control flow and turn into
-    * broadcast offsets; one row-scale shuffle ranks within (bucket)
-    * and offset + within-bucket running sum is the EXACT global
-    * cumulative token count (the score bucketing is monotone and the
+    * the cumulative token count is [[TwoPass.runningSum]] (exact; the
     * (score, doc_id) order is total, so no tie can straddle a
     * boundary decision). CurationSpec pins result-identity against
     * the literal single-window formulation. */
@@ -505,26 +498,9 @@ object Curation {
       budget: Long): DataFrame = {
     val d = Tables.documents(spark, dir).filter(col("text").isNotNull)
     // sc = negated score: ascending (sc, doc_id) = descending quality
-    def rows = d.select(col("doc_id"), col("source"),
+    val rows = d.select(col("doc_id"), col("source"),
       (-col("n_chars")).as("sc"), tokenCount(col("text")).as("n_tokens"))
-    val nBuckets = spark.conf.get("spark.sql.shuffle.partitions").toInt.max(2)
-    // shared first pass (TwoPass.scoreBuckets): sampled balance-only
-    // boundaries, monotone CASE chain, null-sketch guarded
-    val bucketOf = TwoPass.scoreBuckets(rows, col("sc"), nBuckets)
-    // per-bucket token subtotals: bounded by bucket count — driver-side
-    // control flow, not data
-    val sub = rows.withColumn("b", bucketOf(col("sc")))
-      .groupBy(col("b")).agg(sum(col("n_tokens")).as("t"))
-      .collect().sortBy(_.getAs[Int]("b"))
-    val cum = sub.scanLeft(0L)(_ + _.getAs[Long]("t"))
-    val offsets = spark.createDataFrame(
-      sub.zip(cum).map { case (r, off) => (r.getAs[Int]("b"), off) }.toSeq)
-      .toDF("b", "off")
-    val w = Window.partitionBy(col("b")).orderBy(col("sc"), col("doc_id"))
-      .rowsBetween(Window.unboundedPreceding, 0)
-    rows.withColumn("b", bucketOf(col("sc")))
-      .join(broadcast(offsets), Seq("b"))
-      .withColumn("cum", col("off") + sum(col("n_tokens")).over(w))
+    TwoPass.runningSum(spark, rows, Nil, Seq(col("sc"), col("doc_id")), col("n_tokens"))
       .filter(col("cum") <= budget)
       .groupBy(col("source"))
       .agg(
@@ -740,33 +716,15 @@ object Curation {
     * reproducible row-wise by BOTH engines (no rand(), the q62/q93
     * determinism rule). Batch id needs each doc's GLOBAL rank in
     * (key, doc_id) order: the single-window form is a one-task global
-    * sort at scale, so this reuses the q91/q94 TwoPass distributed
-    * prefix shape — sampled balance-only key buckets, per-bucket COUNT
-    * subtotals back to the driver (bounded control flow), broadcast
-    * offsets, one row-scale shuffle with a within-bucket row_number.
-    * Exactness is independent of boundary quality: the bucket function
-    * is monotone, so offset + within-bucket rank IS the global rank.
-    * CurationSpec pins identity against the literal single-window form
-    * plus the full-batches invariant. */
+    * sort at scale, so the rank is the count prefix of
+    * [[TwoPass.runningSum]]. CurationSpec pins identity against the
+    * literal single-window form plus the full-batches invariant. */
   def trainingBatches(spark: SparkSession, dir: String): DataFrame = {
     val d = Tables.documents(spark, dir).filter(col("text").isNotNull)
-    def rows = d.select(col("doc_id"), col("source"),
+    val rows = d.select(col("doc_id"), col("source"),
       tokenCount(col("text")).as("n_tokens"), shuffleKey(col("doc_id")).as("k"))
-    val nBuckets = spark.conf.get("spark.sql.shuffle.partitions").toInt.max(2)
-    val bucketOf = TwoPass.scoreBuckets(rows, col("k"), nBuckets)
-    // per-bucket row counts: bounded by bucket count — driver control
-    // flow, not data
-    val sub = rows.withColumn("b", bucketOf(col("k")))
-      .groupBy(col("b")).agg(count(lit(1)).as("n"))
-      .collect().sortBy(_.getAs[Int]("b"))
-    val cum = sub.scanLeft(0L)(_ + _.getAs[Long]("n"))
-    val offsets = spark.createDataFrame(
-      sub.zip(cum).map { case (r, off) => (r.getAs[Int]("b"), off) }.toSeq)
-      .toDF("b", "off")
-    val w = Window.partitionBy(col("b")).orderBy(col("k"), col("doc_id"))
-    rows.withColumn("b", bucketOf(col("k")))
-      .join(broadcast(offsets), Seq("b"))
-      .withColumn("rnk", col("off") + row_number().over(w) - 1)
+    TwoPass.runningSum(spark, rows, Nil, Seq(col("k"), col("doc_id")), lit(1L))
+      .withColumn("rnk", col("cum") - 1)
       // floor, not a bare cast (the q74 rule): identical in both
       // engines for non-negative exact-under-2^53 values
       .withColumn("batch_id", floor(col("rnk") / BatchDocs).cast("bigint"))
@@ -1146,9 +1104,9 @@ object Curation {
     *
     * Scale shape: banding is a per-row integer div; batch assignment
     * is a window keyed (source, band) — the same per-source
-    * parallelism contract as q74, with the same documented remedy (a
-    * TwoPass distributed prefix rank, drop-in because batch indices
-    * only need within-partition order). Both aggregations reuse the
+    * parallelism contract as q74, with the same documented remedy
+    * ([[TwoPass.runningSum]], drop-in because batch indices only need
+    * within-partition order). Both aggregations reuse the
     * window's (source, band) partitioning — Catalyst plans ONE
     * exchange before the output sort. Integer math end to end; the
     * only division is the final dec6 waste ratio (padded > 0 always:
@@ -2133,47 +2091,29 @@ object Curation {
     * than uniform coverage. Fully reproducible: both engines derive
     * the identical sample row-for-row.
     *
-    * Scale shape: the global cumulative weight is the q94 distributed
-    * prefix sum (sampled [[TwoPass]] buckets over the shuffle key,
-    * per-bucket subtotals as bounded driver control flow, broadcast
-    * offsets + within-bucket running sum) — never a global sort or a
-    * single-partition window. The hit test `cum div step` is
+    * Scale shape: the global cumulative weight is
+    * [[TwoPass.runningSum]] over the shuffle key — never a global sort
+    * or a single-partition window. The hit test `cum div step` is
     * map-side arithmetic; output is n + slack rows. */
   def ppsSample(spark: SparkSession, dir: String): DataFrame =
     ppsSampleAt(spark, dir, PpsSampleTarget)
 
   /** Shared Madow systematic-selection machinery (q142/q189): lay
     * `rows` — columns `idCol`, `w` (long weight), `sk` (shuffle key) —
-    * on the deterministic (sk, id) line via the q94 distributed prefix
-    * sum and pick every `step`-th point. Returns the hit rows with a
-    * `hits` replication count. Multiple passes over `rows` (boundary
-    * sample, per-bucket subtotals, final) — pass a cheap or
-    * materialized frame. */
-  private[graft] def madowHits(spark: SparkSession, rows: => DataFrame,
-      idCol: String, target: Int): DataFrame = {
-    val nBuckets = spark.conf.get("spark.sql.shuffle.partitions").toInt.max(2)
-    val bucketOf = TwoPass.scoreBuckets(rows, col("sk"), nBuckets)
-    val sub = rows.withColumn("b", bucketOf(col("sk")))
-      .groupBy(col("b")).agg(sum(col("w")).as("t"))
-      .collect().sortBy(_.getAs[Int]("b"))
-    val cum = sub.scanLeft(0L)(_ + _.getAs[Long]("t"))
-    val step = math.max(1L, cum.last / target)
-    val offsets = spark.createDataFrame(
-      sub.zip(cum).map { case (r, off) => (r.getAs[Int]("b"), off) }.toSeq)
-      .toDF("b", "off")
-    val runW = Window.partitionBy(col("b")).orderBy(col("sk"), col(idCol))
-      .rowsBetween(Window.unboundedPreceding, 0)
-    rows.withColumn("b", bucketOf(col("sk")))
-      .join(broadcast(offsets), Seq("b"))
-      .withColumn("cum", col("off") + sum(col("w")).over(runW))
-      .withColumn("hits",
-        expr(s"cum div ${step}L - (cum - w) div ${step}L").cast("bigint"))
+    * on the deterministic (sk, id) line via [[TwoPass.runningSum]] and
+    * pick every `step`-th point. Returns the hit rows with a `hits`
+    * replication count. The kernel walks `rows` three times: pass a
+    * cheap or materialized frame. */
+  private[graft] def madowHits(spark: SparkSession, rows: DataFrame,
+      idCol: String, target: Int): DataFrame =
+    TwoPass.runningSum(spark, rows, Nil, Seq(col("sk"), col(idCol)), col("w"))
+      .withColumn("step", greatest(lit(1L), expr(s"tot div $target")))
+      .withColumn("hits", expr("cum div step - (cum - w) div step").cast("bigint"))
       .filter(col("hits") > 0)
-  }
 
   private[graft] def ppsSampleAt(spark: SparkSession, dir: String,
       n: Int): DataFrame = {
-    def rows = Tables.orders(spark, dir).select(col("o_orderkey"),
+    val rows = Tables.orders(spark, dir).select(col("o_orderkey"),
       (col("o_totalprice").cast("decimal(18,2)") * 100).cast("decimal(18,0)")
         .cast("long").as("w"),
       shuffleKey(col("o_orderkey")).as("sk"))
@@ -2221,8 +2161,8 @@ object Curation {
     * Scale shape: q151's two row-scale aggregations build the per-doc
     * weight frame, localCheckpoint-materialized (|docs| × 4 narrow
     * columns) because the Madow machinery makes three passes over it
-    * (the q183 lesson); selection itself is the q94 distributed
-    * prefix sum — never a global sort. */
+    * (the q183 lesson); selection itself is [[TwoPass.runningSum]] —
+    * never a global sort. */
   def dsirResample(spark: SparkSession, dir: String): DataFrame = {
     val toks = Tables.documents(spark, dir)
       .filter(col("text").isNotNull)

@@ -312,31 +312,17 @@ object Relational {
 
   /** Q91: distribution windows — exact NTILE(4) quartile rollup per
     * flag (the missing member of the window family next to
-    * rank/lag/frames) WITHOUT a per-flag global row sort — a
-    * DISTRIBUTED RANK via the two-pass prefix-sum pattern q74's
-    * packing contract documents as the scale remedy:
+    * rank/lag/frames) WITHOUT a per-flag global row sort: the global
+    * rank is the count prefix of [[TwoPass.runningSum]] (sampled price
+    * buckets, bounded per-(flag, bucket) subtotals, broadcast offsets,
+    * one row-scale shuffle); the rank's ntile bucket follows in closed
+    * form and the 12-row rollup aggregates per (flag, quartile).
     *
-    *  - job 0: a mergeable percentile sketch (bounded memory, q82's
-    *    sufficient-statistics discipline) picks `shuffle.partitions`
-    *    price-bucket boundaries; no row-scale shuffle.
-    *  - job A: rows-per-(bucket, flag) via map-side-combining count;
-    *    the tiny result returns to the driver (bounded by
-    *    buckets x flags — control flow, not data) and becomes
-    *    broadcast rank offsets.
-    *  - job B: the ONE row-scale shuffle — row_number within
-    *    (bucket, flag), many balanced groups instead of one task per
-    *    3-value flag, plus the offset = the exact global rank; the
-    *    rank's ntile bucket follows in closed form and the 12-row
-    *    rollup aggregates per (flag, quartile).
-    *
-    * Exactness: bucketing is a monotone pure function of price, so
-    * offset + within-bucket rank is an exact global rank for ANY
-    * boundary choice — sketch accuracy only shapes balance. Tie order
-    * within a bucket is arbitrary, which cannot move anything across
-    * output cells: tied rows share a price, so the rollup is
-    * invariant to which of them takes which rank (the reason the
-    * literal `ntile(4)` with (orderkey, linenumber) tie-breaks agrees
-    * cell-for-cell — spec-pinned vs [[ntileQuartilesViaWindow]]).
+    * Tie order within a bucket is arbitrary, which cannot move
+    * anything across output cells: tied rows share a price, so the
+    * rollup is invariant to which of them takes which rank (the reason
+    * the literal `ntile(4)` with (orderkey, linenumber) tie-breaks
+    * agrees cell-for-cell — spec-pinned vs [[ntileQuartilesViaWindow]]).
     * The oracle stays plain NTILE(4).
     *
     * Known bound: a single price carrying a large fraction of one
@@ -357,44 +343,12 @@ object Relational {
     val rows = li.select(col("l_returnflag"), p.as("p"),
       (p * 100).cast("long").as("pc"))
       .localCheckpoint()
-    val nBuckets = spark.conf.get("spark.sql.shuffle.partitions").toInt.max(2)
-    // job 0: boundary sketch — a MERGEABLE percentile sketch with
-    // bounded memory (q82's sufficient-statistics discipline) over a
-    // seeded 5% sample; no row-scale shuffle. Accuracy only shapes
-    // balance, never correctness. Shared first pass: TwoPass.scoreBuckets
-    // (monotone CASE chain, ties never straddle, null-sketch guarded).
-    val bucketOf = TwoPass.scoreBuckets(rows, col("pc"), nBuckets)
-    // job A: rows per (bucket, flag) — map-side combine collapses to
-    // <= buckets x flags rows per task before the (tiny) shuffle; the
-    // collect is bounded driver-side control flow, not data
-    val sub = rows.withColumn("b", bucketOf(col("pc")))
-      .groupBy(col("b"), col("l_returnflag"))
-      .agg(count(lit(1)).as("rows_bf"))
-      .collect()
-    val offRows = sub.groupBy(_.getAs[String]("l_returnflag")).toSeq.flatMap {
-      case (flag, bs) =>
-        val sorted = bs.sortBy(_.getAs[Int]("b"))
-        val cum = sorted.scanLeft(0L)(_ + _.getAs[Long]("rows_bf"))
-        sorted.zip(cum).map { case (r, off) =>
-          (r.getAs[Int]("b"), flag, off, cum.last)
-        }
-    }
-    val offsets = spark.createDataFrame(offRows)
-      .toDF("b", "l_returnflag", "off", "n_total")
-    // job B: the one row-scale shuffle — rank within (bucket, flag)
-    // (many balanced groups, never one task per flag), plus the
-    // broadcast offset = the exact global rank. Tie order inside a
-    // bucket is arbitrary, which cannot change the rollup: tied rows
-    // share a price, so which of them takes which rank moves nothing
-    // across (flag, quartile) cells. The rank's ntile bucket follows
-    // from the closed form: the first (N mod 4) quartiles hold
-    // ceil(N/4) ranks, the rest floor(N/4) — inverted per row with
-    // pure integer arithmetic (ceil(a/b) = (a+b-1) div b).
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("b"), col("l_returnflag")).orderBy(col("pc"))
-    rows.withColumn("b", bucketOf(col("pc")))
-      .join(broadcast(offsets), Seq("b", "l_returnflag"))
-      .withColumn("r", col("off") + row_number().over(w))
+    // r = exact global rank, n_total = the flag's row count. The rank's
+    // ntile bucket follows from the closed form: the first (N mod 4)
+    // quartiles hold ceil(N/4) ranks, the rest floor(N/4) — inverted
+    // per row with pure integer arithmetic (ceil(a/b) = (a+b-1) div b).
+    TwoPass.runningSum(spark, rows, Seq("l_returnflag"), Seq(col("pc")), lit(1L))
+      .withColumnsRenamed(Map("cum" -> "r", "tot" -> "n_total"))
       .withColumn("k", expr("n_total div 4"))
       .withColumn("rem", col("n_total") % 4)
       // greatest(k,1): k=0 only when N<4, where the first branch always
@@ -511,13 +465,10 @@ object Relational {
     * same argument q91's quartile rollup rests on.
     *
     * Scale shape: ranks per segment must NOT come from a per-segment
-    * window (every order of a segment through one task). This is the
-    * q91 two-pass rank generalized to grouped prefix sums: sampled
-    * balance-only buckets over cents, per-(segment, bucket) counts to
-    * the driver (bounded control flow: |segments|·|buckets| rows),
-    * broadcast offsets, within-(segment, bucket) local ranks — many
-    * balanced groups — then ONE map-side-combined aggregation of the
-    * three exact integer moments (n, T=Σx, S=Σ rank·x) per segment.
+    * window (every order of a segment through one task). The rank is
+    * the per-segment count prefix of [[TwoPass.runningSum]], then ONE
+    * map-side-combined aggregation of the three exact integer moments
+    * (n, T=Σx, S=Σ rank·x) per segment.
     * Accumulators are decimals (S up to ~7e15 at sf0.1; ANSI would
     * throw, not corrupt, at the ~sf10 point where widening past
     * (38,0) becomes the driver-side last mile, same stance as q135). */
@@ -533,27 +484,12 @@ object Relational {
           .cast("decimal(18,0)").cast("long").as("cents"),
         col("o_orderkey"))
       .localCheckpoint()
-    val nBuckets = spark.conf.get("spark.sql.shuffle.partitions").toInt.max(2)
-    val bucketOf = TwoPass.scoreBuckets(rows, col("cents"), nBuckets)
-    val sub = rows.withColumn("b", bucketOf(col("cents")))
-      .groupBy(col("segment"), col("b")).agg(count(lit(1)).as("n"))
-      .collect()
-    val offRows = sub.groupBy(_.getAs[String]("segment")).toSeq.flatMap {
-      case (seg, bs) =>
-        val sorted = bs.sortBy(_.getAs[Int]("b"))
-        val cum = sorted.map(_.getAs[Long]("n")).scanLeft(0L)(_ + _)
-        sorted.zip(cum).map { case (r, off) => (r.getAs[Int]("b"), seg, off) }
-    }
-    val offsets = spark.createDataFrame(offRows).toDF("b", "segment", "off")
-    val w = Window.partitionBy(col("segment"), col("b"))
-      .orderBy(col("cents"), col("o_orderkey"))
-    rows.withColumn("b", bucketOf(col("cents")))
-      .join(broadcast(offsets), Seq("b", "segment"))
-      .withColumn("rnk", col("off") + row_number().over(w))
+    TwoPass.runningSum(spark, rows, Seq("segment"),
+        Seq(col("cents"), col("o_orderkey")), lit(1L))
       .groupBy(col("segment"))
       .agg(count(lit(1)).as("n"),
         sum(col("cents").cast("decimal(28,0)")).as("t"),
-        sum(col("rnk").cast("decimal(19,0)")
+        sum(col("cum").cast("decimal(19,0)")
           * col("cents").cast("decimal(19,0)")).as("s"))
       .select(col("segment"), col("n").as("n_orders"),
         dec2(col("t") / 100).as("total_value"),
@@ -1209,11 +1145,9 @@ object Relational {
     * CROSSES 80% still counts as A on both engines.
     *
     * Scale shape: the global revenue-descending prefix sum is the one
-    * shape that degenerates to a single-task sort, so this reuses
-    * q94's distributed two-pass prefix sum — sampled balance-only
-    * buckets over the per-part frame, bounded per-bucket subtotals as
-    * driver control flow, broadcast offsets, within-bucket window.
-    * The class rollup is a 3-row aggregation. */
+    * shape that degenerates to a single-task sort, so this is
+    * [[TwoPass.runningSum]] over the per-part frame. The class rollup
+    * is a 3-row aggregation. */
   def abcClassification(spark: SparkSession, dir: String): DataFrame = {
     // round-12: the per-part revenue frame is a full shuffled
     // aggregation — it ran once per pass (sketch, subtotal, rank scan);
@@ -1224,34 +1158,21 @@ object Relational {
         .cast("decimal(18,0)").cast("long")).as("c"))
       .withColumn("sc", -col("c"))
       .localCheckpoint()
-    val nBuckets = spark.conf.get("spark.sql.shuffle.partitions").toInt.max(2)
-    val bucketOf = TwoPass.scoreBuckets(rows, col("sc"), nBuckets)
-    val sub = rows.withColumn("b", bucketOf(col("sc")))
-      .groupBy(col("b")).agg(sum(col("c")).as("t"))
-      .collect().sortBy(_.getAs[Int]("b"))
-    val cum = sub.scanLeft(0L)(_ + _.getAs[Long]("t"))
-    val total = cum.last
-    val offsets = spark.createDataFrame(
-      sub.zip(cum).map { case (r, off) => (r.getAs[Int]("b"), off) }.toSeq)
-      .toDF("b", "off")
-    val w = Window.partitionBy(col("b")).orderBy(col("sc"), col("pk"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    rows.withColumn("b", bucketOf(col("sc")))
-      .join(broadcast(offsets), Seq("b"))
-      .withColumn("cum_prev",
-        col("off") + coalesce(sum(col("c")).over(w), lit(0L)))
+    // (sc, pk) is a total order, so the exclusive prefix is cum - c
+    TwoPass.runningSum(spark, rows, Nil, Seq(col("sc"), col("pk")), col("c"))
+      .withColumn("cum_prev", col("cum") - col("c"))
       .withColumn("abc_class",
-        when(col("cum_prev") * 5 < lit(total) * 4, "A")
-          .when(col("cum_prev") * 20 < lit(total) * 19, "B")
+        when(col("cum_prev") * 5 < col("tot") * 4, "A")
+          .when(col("cum_prev") * 20 < col("tot") * 19, "B")
           .otherwise("C"))
-      .groupBy(col("abc_class"))
+      .groupBy(col("abc_class"), col("tot"))
       .agg(count(lit(1)).cast("bigint").as("n_parts"),
         sum(col("c")).as("revc"))
       .select(col("abc_class"),
         col("n_parts"),
         dec2(col("revc").cast("decimal(19,0)") / 100).as("revenue"),
         dec6(col("revc").cast("decimal(19,0)") * 100
-          / lit(total).cast("decimal(19,0)")).as("revenue_share_pct"))
+          / col("tot").cast("decimal(19,0)")).as("revenue_share_pct"))
       .orderBy(col("abc_class"))
   }
 

@@ -3,14 +3,19 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
-/** Shared first pass of the distributed two-pass rank family
-  * (q91 ntile, q94 budget selection, q51 targeted quantiles): sampled
-  * percentile boundaries over a value column, returned as the monotone
-  * CASE-chain bucket function.
+/** The distributed two-pass family: exact global ranks and prefixes
+  * without a one-task global sort. Its members are the rank kernels
+  * ([[groupRankLookup]], [[groupWeightedMedian]]) and [[runningSum]]
+  * with its 7 consumers (q91, q145, q173, q94, q111, q142, q189); all
+  * share the sampled, balance-only bucket function [[scoreBuckets]]
+  * and one bucket-count rule. (`Derivations.quantilesDistributed`
+  * keeps its own passes: it interpolates doubles like Spark's
+  * `Percentile`, the kernels rank longs.)
   *
   * One definition on purpose — the q62 sampleBucket lesson
   * ([[Curation.sampleBucket]]): a boundary/guard fix must land in one
@@ -100,6 +105,61 @@ private[graft] object TwoPass {
     c => org.apache.spark.sql.GraftSqlShim.column(
       graft.functions.BoundaryBucket(
         org.apache.spark.sql.GraftSqlShim.expression(c.cast("double")), bnds))
+  }
+
+  /** Buckets per distributed pass: the session's shuffle width, at
+    * least 2. */
+  private def bucketCount(spark: SparkSession): Int =
+    spark.conf.get("spark.sql.shuffle.partitions").toInt.max(2)
+
+  /** Distributed running sum: `rows` plus `cum`, the exact inclusive
+    * running sum of the non-null `weight` (as long) within each
+    * `groups` key in `order`, and `tot`, the group's total weight. The
+    * frame is ROWS, so tied rows take distinct prefixes (deterministic
+    * when `order` is total). `groups` may be empty: one global line.
+    *
+    * Never a per-group global sort. The first `order` column is the
+    * bucket key of [[scoreBuckets]]; ONE map-side-combined (group,
+    * bucket) weight subtotal comes back to the driver (bounded:
+    * |groups| x buckets rows, control flow, not data); its scanLeft
+    * becomes per-(group, bucket) offsets, a local relation (building it
+    * starts no job) broadcast into the one row-scale shuffle, a
+    * within-(group, bucket) running window. Exact for any boundary
+    * quality: buckets are monotone in the bucket key and never split
+    * equal keys, so offset + within-bucket sum is the global prefix.
+    * A row with a null group or bucket key has no prefix and is
+    * dropped. `rows` is walked three times (sketch, subtotal, final):
+    * pass a cheap or materialized frame.
+    *
+    * Known bound: one bucket-key value carrying a large share of a
+    * group's rows lands its whole tie-run in one (group, bucket) task.
+    * The remedy, if a corpus ever has such mass points, is to collapse
+    * tied keys into runs first. */
+  def runningSum(spark: SparkSession, rows: DataFrame, groups: Seq[String],
+      order: Seq[Column], weight: Column): DataFrame = {
+    val bucketOf = scoreBuckets(rows, order.head, bucketCount(spark))
+    val keys = groups :+ "__b"
+    val keyed = rows.withColumn("__b", bucketOf(order.head))
+      .withColumn("__w", weight.cast("long"))
+    val sub = keyed.groupBy(keys.map(col): _*).agg(sum(col("__w")).as("__t"))
+    val b = groups.length
+    val offRows = new java.util.ArrayList[Row]
+    sub.collect().filterNot(_.isNullAt(b)).groupBy(r => (0 until b).map(r.get))
+      .foreach { case (key, bs) =>
+        val sorted = bs.sortBy(_.getInt(b))
+        val cum = sorted.scanLeft(0L)(_ + _.getLong(b + 1))
+        sorted.zip(cum).foreach { case (r, off) =>
+          offRows.add(Row.fromSeq(key ++ Seq[Any](r.getInt(b), off, cum.last)))
+        }
+      }
+    val offsets = spark.createDataFrame(offRows, StructType(sub.schema.take(b + 1) ++
+      Seq(StructField("__off", LongType), StructField("__tot", LongType))))
+    val win = Window.partitionBy(keys.map(col): _*).orderBy(order: _*)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    keyed.join(broadcast(offsets), keys)
+      .select(rows.columns.toSeq.map(c => col(s"`$c`")) ++ Seq(
+        (col("__off") + sum(col("__w")).over(win)).as("cum"),
+        col("__tot").as("tot")): _*)
   }
 
   /** Row budget of the one-task finish ([[oneTask]]): a kernel input of
@@ -251,10 +311,8 @@ private[graft] object TwoPass {
     * kernel's persisted, filtered frame. */
   private def weightedMedianBuckets(spark: SparkSession,
       rows: DataFrame): Map[String, (Long, Long)] = {
-    import org.apache.spark.sql.expressions.Window
     import spark.implicits._
-    val nBuckets = spark.conf.get("spark.sql.shuffle.partitions").toInt.max(2)
-    val bucketOf = scoreBuckets(rows, col("c"), nBuckets)
+    val bucketOf = scoreBuckets(rows, col("c"), bucketCount(spark))
     val hist = rows.withColumn("b", bucketOf(col("c")))
       .groupBy(col("k"), col("b")).agg(sum(col("w")).cast("long").as("n"))
       .collect()
@@ -346,10 +404,8 @@ private[graft] object TwoPass {
     * persisted, filtered frame. */
   private def rankLookupBuckets(spark: SparkSession, rows: DataFrame,
       ranksFor: Long => Seq[Long]): Map[String, GroupRanks] = {
-    import org.apache.spark.sql.expressions.Window
     import spark.implicits._
-    val nBuckets = spark.conf.get("spark.sql.shuffle.partitions").toInt.max(2)
-    val bucketOf = scoreBuckets(rows, col("c"), nBuckets)
+    val bucketOf = scoreBuckets(rows, col("c"), bucketCount(spark))
     val hist = rows.withColumn("b", bucketOf(col("c")))
       .groupBy(col("k"), col("b")).agg(count(lit(1)).as("n")).collect()
     // locate, per group, the bucket + local rank of every wanted value

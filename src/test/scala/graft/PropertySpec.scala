@@ -165,6 +165,41 @@ class PropertySpec extends SparkSuite {
     }
   }
 
+  test("TwoPass.runningSum: cum and tot == a driver-side exact running sum") {
+    // every shape is sampled on its own, so none can go uncovered:
+    // empty, one row, a mass point (every key equal, ties broken by
+    // id), several groups with one single-row group, zero weights
+    type R = (String, Long, Long) // (group, key, weight); id = position
+    def rowsOf(n: Int, groups: Gen[String], keys: Gen[Long], weights: Gen[Long]) =
+      Gen.listOfN(n, Gen.zip(groups, keys, weights))
+    val shapes: Seq[Gen[List[R]]] = Seq(
+      Gen.const(Nil),
+      rowsOf(1, Gen.const("g0"), Gen.choose(-5L, 5L), Gen.choose(0L, 9L)),
+      rowsOf(300, Gen.const("g0"), Gen.const(7L), Gen.choose(0L, 5L)),
+      for {
+        many <- rowsOf(2000, Gen.oneOf("g0", "g1", "g2"), Gen.choose(-50L, 50L),
+          Gen.choose(0L, 9L))
+        solo <- rowsOf(1, Gen.const("solo"), Gen.choose(-50L, 50L), Gen.choose(1L, 9L))
+      } yield many ++ solo,
+      rowsOf(500, Gen.oneOf("g0", "g1"), Gen.choose(0L, 1000L), Gen.const(0L)))
+    for (shape <- shapes) forAllSampled(shape, n = 2) { rs =>
+      val indexed = rs.zipWithIndex.map { case ((g, k, w), id) => (g, k, id.toLong, w) }
+      val df = indexed.toDF("g", "k", "id", "w")
+      for (groups <- Seq(Seq("g"), Nil)) {
+        val exact = indexed.groupBy(r => if (groups.isEmpty) "" else r._1).values.flatMap { g =>
+          val sorted = g.sortBy(r => (r._2, r._3))
+          val cum = sorted.scanLeft(0L)(_ + _._4).tail
+          sorted.zip(cum).map { case (r, c) => r._3 -> (c, cum.last) }
+        }.toMap
+        val got = graft.operators.TwoPass.runningSum(spark, df, groups,
+            Seq(col("k"), col("id")), col("w"))
+          .select("id", "cum", "tot").collect()
+          .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+        assert(got === exact, s"groups $groups, ${rs.length} rows")
+      }
+    }
+  }
+
   test("BloomKernel: no false negatives on any inserted set; probes stay selective") {
     import org.apache.spark.unsafe.types.UTF8String
     import graft.functions.BloomKernel

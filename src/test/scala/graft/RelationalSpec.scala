@@ -142,6 +142,30 @@ class RelationalSpec extends SparkSuite {
     assert(revs === revs.sorted)
   }
 
+  test("q91 ntile: run-splitting formulation is identical to the ntile window") {
+    val fast = Relational.ntileQuartiles(spark, Sf0001)
+    val slow = Relational.ntileQuartilesViaWindow(spark, Sf0001)
+    assert(fast.exceptAll(slow).count() === 0)
+    assert(slow.exceptAll(fast).count() === 0)
+    assert(fast.count() === slow.count())
+  }
+
+  test("q91 ntile: quartiles within a flag differ by at most one row") {
+    val q = Relational.ntileQuartiles(spark, Sf0001).collect()
+    q.groupBy(_.getAs[String]("l_returnflag")).foreach { case (flag, rows) =>
+      assert(rows.map(_.getAs[Long]("quartile")).sorted.toSeq === Seq(1L, 2L, 3L, 4L), flag)
+      val ns = rows.map(_.getAs[Long]("n"))
+      assert(ns.max - ns.min <= 1, s"$flag: ${ns.toSeq}")
+      // quartile boundaries are ordered: max of k <= min of k+1
+      val sorted = rows.sortBy(_.getAs[Long]("quartile"))
+      sorted.sliding(2).foreach {
+        case Array(a, b) =>
+          assert(a.getAs[Double]("max_price") <= b.getAs[Double]("min_price"), flag)
+        case _ =>
+      }
+    }
+  }
+
   test("q145 Gini: matches a driver-side sorted replay; bounds hold") {
     import spark.implicits._
     val orders = Tables.orders(spark, Sf0001)
